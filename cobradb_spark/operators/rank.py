@@ -45,9 +45,9 @@ _PINNED_LOCK = threading.Lock()
 def pin(df: DataFrame) -> DataFrame:
     """Register an ALREADY-persisted frame for release_rank_caches().
 
-    For frames whose persist() happened inside an operator's own loop
-    (e.g. the surviving frame of an iterate-and-swap label propagation)
-    but must outlive the function until the caller collects."""
+    For frames persisted inside an operator (e.g. a range-partitioned
+    frame tagged with its partition id) that must outlive the function
+    until the caller collects."""
     with _PINNED_LOCK:
         _PINNED.append(df)
     return df

@@ -595,7 +595,8 @@ LEFT JOIN border b ON b.id = n.id
     "with the same 3x3-cell equi-join as the radius family (never a "
     "cross join — a point's eps-ball can only intersect its 9 grid "
     "cells); clusters are the connected components of the core-core "
-    "eps-graph, computed by hash-min label propagation to fixpoint "
+    "eps-graph, computed by the hash-min operator shared by the four "
+    "clustering keys (operators/fixpoint.components) "
     "(cluster id = min core key, so labels are order-independent — the "
     "one deliberate deviation from scan-order DBSCAN, whose border "
     "assignment depends on visit order: here a border point joins the "
@@ -604,11 +605,14 @@ LEFT JOIN border b ON b.id = n.id
     "generation + recursive-CTE reachability.  Scale: the pair join "
     "partitions by cell key (dense-cell skew = AQE skew-join case); "
     "label propagation shuffles only the core-edge list per round with "
-    "localCheckpoint'd frontiers; component diameter is bounded by the "
-    "clump geometry, and rounds stop at convergence.",
+    "localCheckpoint'd labels; component diameter is bounded by the "
+    "clump geometry, rounds stop at convergence, and the loop raises "
+    "past its 16-round cap.",
     tags=("geo", "graph"),
 )
 def geo_dbscan_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from cobradb_spark.operators.fixpoint import components
+
     p = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("id"),
         F.expr(_DB_LAT.format(k="c_custkey")).alias("lat"),
@@ -641,9 +645,8 @@ def geo_dbscan_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     d2 = (F.col("alat") - F.col("blat")) * (F.col("alat") - F.col("blat")) + (
         F.col("alon") - F.col("blon")
     ) * (F.col("alon") - F.col("blon"))
-    # localCheckpoint (eager), not persist: the iterative-lineage
-    # discipline from graph.py — each round must not re-analyze the
-    # grid-join subtree, and the label plan must not grow per round.
+    # localCheckpoint (eager), not persist: each components() round
+    # must not re-analyze the grid-join subtree.
     pairs = (
         px.join(b, (F.col("jla") == F.col("bla")) & (F.col("jlo") == F.col("blo")))
         .filter((F.col("src") != F.col("dst")) & (d2 <= F.lit(_DB_EPS * _DB_EPS)))
@@ -662,39 +665,10 @@ def geo_dbscan_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("src", "dst")
         .localCheckpoint()
     )
-    labels = core.select("id", F.col("id").alias("cluster_id")).localCheckpoint()
-    for _ in range(16):  # clump-bounded diameter; converges in ~4 rounds
-        neigh = (
-            ce.join(labels, ce.dst == labels.id)
-            .groupBy("src")
-            .agg(F.min("cluster_id").alias("nmin"))
-        )
-        new = (
-            labels.join(neigh, labels.id == neigh.src, "left")
-            .select(
-                "id",
-                F.least("cluster_id", F.coalesce("nmin", F.col("cluster_id"))).alias(
-                    "cluster_id"
-                ),
-                (F.coalesce("nmin", F.col("cluster_id")) < F.col("cluster_id")).alias(
-                    "_changed"
-                ),
-            )
-            .localCheckpoint()
-        )
-        changed = new.agg(F.max("_changed")).first()[0]
-        labels = new.select("id", "cluster_id")
-        if not changed:
-            break
-    else:
-        # r7 ADVICE: the oracle's recursive CTE always reaches the
-        # fixpoint — a silently-unconverged cap would hash WRONG, not
-        # error.  Fail loudly instead.
-        raise RuntimeError(
-            "geo_dbscan_grid: hash-min label propagation did not "
-            "converge within 16 rounds — raise the round cap (a "
-            "cluster's min-label propagation distance exceeds it)"
-        )
+    # clump-bounded diameter; the round cap is generous
+    labels = components(ce, core, max_rounds=16, name="geo_dbscan_grid").select(
+        F.col("n").alias("id"), F.col("comp").alias("cluster_id")
+    )
     border = (
         pairs.join(labels.withColumnRenamed("id", "dst"), "dst")
         .join(core.withColumnRenamed("id", "src"), "src", "left_anti")

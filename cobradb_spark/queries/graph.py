@@ -569,105 +569,28 @@ SELECT c.part_id, c.comp_id, s.comp_size
 FROM comp c JOIN sizes s USING (comp_id)
 """,
     doc="Connected components of the strong co-purchase graph (part pairs "
-    f"sharing >= {_CC_MIN_SUPPORT} orders). Complements dedup_cluster_cc "
-    "(queries/mlprep.py), which runs plain min-propagation on dedup "
-    "candidate graphs of diameter ~3: THIS operator handles general "
-    "graphs — at sf0.001 the strong graph is one 200-node component and "
-    "at sf0.01 a 1860-node sparse giant — where plain propagation needs "
-    "O(diameter) rounds; path halving cuts that to O(log). "
-    "Algorithm: iterative min-label propagation with path halving — each "
-    "round takes the min component id over self + neighbors (one join + "
-    "partial-agg on the pinned, pre-partitioned edge list), then jumps "
-    "comp <- comp[comp] (a self-join on the |V|-row label table), so label "
-    "trees halve every round and convergence is O(log diameter) rounds, "
-    "checked by a changed-row count and loudly bounded at "
-    f"{_CC_MAX_ITERS} iterations. Labels localCheckpoint every round: "
-    "persist() alone caches DATA but the LOGICAL plan still nests (the "
-    "halving self-join doubles it per round — measured 2s/4.9s/28s/429s "
-    "analysis blowup by round 4 at sf0.01), so the lineage itself must "
-    "be truncated — the iterative-loop discipline Spark needs; edges "
-    "never re-shuffle. The oracle computes "
-    "the same components via DuckDB's recursive transitive closure, "
+    f"sharing >= {_CC_MIN_SUPPORT} orders) — at sf0.001 one 200-node "
+    "component, at sf0.01 an 1860-node sparse giant — via the hash-min "
+    "operator shared by the four clustering keys (operators/fixpoint."
+    "components): per round one neighbor-min join + partial agg on the "
+    "pinned edge list and one path-halving hop, so O(log diameter) rounds, "
+    f"labels localCheckpoint'd, loud failure past {_CC_MAX_ITERS} rounds. "
+    "The oracle computes the same components via DuckDB's recursive "
+    "transitive closure, "
     "feasible because strong edges are sparse. Output: (part_id, min-id "
     "component label, component size) — all integers, hash-exact. At "
     "100 TB the same loop runs unchanged: every round is one shuffle join "
     "+ one hash agg over edge/label tables, no driver state beyond the "
-    "changed-count scalar.",
+    "convergence flag.",
     tags=("graph",),
 )
 def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from cobradb_spark.operators.fixpoint import components
     from cobradb_spark.operators.rank import pin_cache
 
-    strong = _strong_pairs(spark, sf_dir)
-    edges = pin_cache(
-        strong.select(F.col("p1").alias("src"), F.col("p2").alias("dst")).union(
-            strong.select(F.col("p2").alias("src"), F.col("p1").alias("dst"))
-        )
-    )
-    # localCheckpoint (eager) truncates the LOGICAL lineage each round —
-    # persist() alone is not enough: the halving self-join references the
-    # previous round's plan twice, so the un-truncated plan doubles per
-    # round and Catalyst analysis time grows exponentially (measured
-    # 2s/4.9s/28s/429s per round by round 4 at sf0.01 with persist-only).
-    labels = (
-        edges.select(F.col("src").alias("n")).distinct()
-        .select("n", F.col("n").alias("comp"))
-        .localCheckpoint()
-    )
-    # PROBED AND REJECTED (r15, verdict item 1) — both round-halving
-    # levers measured worse than this one-hop r14 shape:
-    # (a) doubling the path-HALVING hop (comp <- s[s[s[n]]]): round
-    #     count stayed 7/7 at sf0.1 — convergence here is
-    #     neighbor-propagation-bound, not tree-compression-bound, so
-    #     the extra |V|-row self-join per round bought nothing;
-    # (b) TWO neighbor-min hops per round (labels travel two edges per
-    #     checkpoint): rounds did drop 7 -> 4, but the hop-1 subtree is
-    #     referenced twice in the round plan (hop-2's build side AND
-    #     probe side) and Catalyst re-executes it — fresh-JVM
-    #     interleaved A/B at sf0.1: ref 5.1/5.9/7.0 s vs two-hop
-    #     6.7/8.8/9.5 s, median 1.4x WORSE.
-    for _ in range(_CC_MAX_ITERS):
-        nbr_min = (
-            edges.join(labels, edges["src"] == labels["n"])
-            .groupBy(F.col("dst").alias("n2"))
-            .agg(F.min("comp").alias("nbr_comp"))
-        )
-        # carry the pre-round label through the halving join so the
-        # convergence test is a plain filter over the checkpointed rows
-        # — the old jumped><labels re-join cost an extra shuffle-join
-        # job per round (~0.25 s x 7 rounds at sf0.1, r14 A/B: 8.1 ->
-        # 6.6 s median with the HOF edge build)
-        stepped = (
-            labels.join(nbr_min, labels["n"] == F.col("n2"), "left")
-            .select(
-                "n",
-                F.col("comp").alias("old"),
-                F.least(
-                    "comp", F.coalesce("nbr_comp", F.col("comp"))
-                ).alias("comp"),
-            )
-        )
-        # path halving: comp <- comp's own current label
-        l2 = stepped.select(
-            F.col("n").alias("cn"), F.col("comp").alias("ccomp")
-        )
-        jumped = (
-            stepped.join(l2, stepped["comp"] == l2["cn"])
-            .select(
-                "n",
-                F.col("ccomp").alias("comp"),
-                (F.col("ccomp") != F.col("old")).alias("_ch"),
-            )
-            .localCheckpoint()
-        )
-        changed = jumped.filter("_ch").count()
-        labels = jumped.select("n", "comp")
-        if changed == 0:
-            break
-    else:
-        raise RuntimeError(
-            f"connected components did not converge in {_CC_MAX_ITERS} rounds"
-        )
+    edges = pin_cache(_strong_edges_both_dirs(spark, sf_dir))
+    nodes = edges.select("src").distinct()
+    labels = components(edges, nodes, max_rounds=_CC_MAX_ITERS, name="graph_connected_components")
     sizes = labels.groupBy("comp").agg(F.count("*").alias("comp_size"))
     return (
         labels.join(sizes, "comp")
@@ -712,6 +635,33 @@ FROM {last} v JOIN sizes s USING (lab)
 """
 
 
+def _lpa_labels(edges: DataFrame) -> DataFrame:
+    """(n, lab) after _LPA_ROUNDS plurality-vote rounds over a symmetric
+    (src, dst) edge list, ties to the smallest label."""
+    from pyspark.sql import Window
+
+    labels = (
+        edges.select(F.col("src").alias("n"))
+        .distinct()
+        .select("n", F.col("n").alias("lab"))
+        .localCheckpoint()
+    )
+    w = Window.partitionBy("n2").orderBy(F.col("c").desc(), F.col("lab"))
+    for _ in range(_LPA_ROUNDS):
+        counts = (
+            edges.join(labels, edges["src"] == labels["n"])
+            .groupBy(F.col("dst").alias("n2"), "lab")
+            .agg(F.count("*").alias("c"))
+        )
+        labels = (
+            counts.withColumn("rn", F.row_number().over(w))
+            .filter(F.col("rn") == 1)
+            .select(F.col("n2").alias("n"), "lab")
+            .localCheckpoint()
+        )
+    return labels
+
+
 @register(
     "graph_label_propagation",
     oracle=_lpa_oracle(),
@@ -733,33 +683,9 @@ FROM {last} v JOIN sizes s USING (lab)
 )
 def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cobradb_spark.operators.rank import pin_cache
-    from pyspark.sql import Window
 
-    strong = _strong_pairs(spark, sf_dir)
-    edges = pin_cache(
-        strong.select(F.col("p1").alias("src"), F.col("p2").alias("dst")).union(
-            strong.select(F.col("p2").alias("src"), F.col("p1").alias("dst"))
-        )
-    )
-    labels = (
-        edges.select(F.col("src").alias("n"))
-        .distinct()
-        .select("n", F.col("n").alias("lab"))
-        .localCheckpoint()
-    )
-    w = Window.partitionBy("n2").orderBy(F.col("c").desc(), F.col("lab"))
-    for _ in range(_LPA_ROUNDS):
-        counts = (
-            edges.join(labels, edges["src"] == labels["n"])
-            .groupBy(F.col("dst").alias("n2"), "lab")
-            .agg(F.count("*").alias("c"))
-        )
-        labels = (
-            counts.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select(F.col("n2").alias("n"), "lab")
-            .localCheckpoint()
-        )
+    edges = pin_cache(_strong_edges_both_dirs(spark, sf_dir))
+    labels = _lpa_labels(edges)
     sizes = labels.groupBy("lab").agg(
         F.count("*").cast("bigint").alias("comm_size")
     )
@@ -1361,6 +1287,21 @@ FROM fin
 """
 
 
+def _survivor_degrees(edges: DataFrame, surv: DataFrame) -> DataFrame:
+    """(src, deg): each surviving node's degree counted over edges whose
+    BOTH endpoints survive."""
+    return (
+        edges.join(surv, edges["src"] == surv["n"], "left_semi")
+        .join(
+            surv.select(F.col("n").alias("n2")),
+            edges["dst"] == F.col("n2"),
+            "left_semi",
+        )
+        .groupBy("src")
+        .agg(F.count("*").alias("deg"))
+    )
+
+
 @register(
     "graph_kcore_peel",
     oracle=_kcore_oracle(),
@@ -1388,40 +1329,19 @@ FROM fin
 def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cobradb_spark.operators.rank import pin_cache
 
-    strong = _strong_pairs(spark, sf_dir)
-    edges = pin_cache(
-        strong.select(F.col("p1").alias("src"), F.col("p2").alias("dst")).union(
-            strong.select(F.col("p2").alias("src"), F.col("p1").alias("dst"))
-        )
-    )
+    edges = pin_cache(_strong_edges_both_dirs(spark, sf_dir))
     surv = edges.select(F.col("src").alias("n")).distinct().localCheckpoint()
     for _ in range(_KCORE_ROUNDS):
         surv = (
-            edges.join(surv, edges["src"] == surv["n"], "left_semi")
-            .join(
-                surv.select(F.col("n").alias("n2")),
-                edges["dst"] == F.col("n2"),
-                "left_semi",
-            )
-            .groupBy("src")
-            .agg(F.count("*").alias("deg"))
+            _survivor_degrees(edges, surv)
             .filter(F.col("deg") >= _KCORE_K)
             .select(F.col("src").alias("n"))
             .localCheckpoint()
         )
-    fin = (
-        edges.join(surv, edges["src"] == surv["n"], "left_semi")
-        .join(
-            surv.select(F.col("n").alias("n2")),
-            edges["dst"] == F.col("n2"),
-            "left_semi",
-        )
-        .groupBy("src")
-        .agg(F.count("*").cast("bigint").alias("core_deg"))
-    )
+    fin = _survivor_degrees(edges, surv)
     size = fin.agg(F.count("*").cast("bigint").alias("core_size"))
     return fin.crossJoin(F.broadcast(size)).select(
-        F.col("src").alias("part_id"), "core_deg", "core_size"
+        F.col("src").alias("part_id"), F.col("deg").alias("core_deg"), "core_size"
     )
 
 
@@ -1782,29 +1702,10 @@ FROM dsum d LEFT JOIN intra i USING (lab) CROSS JOIN mm
 )
 def graph_modularity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cobradb_spark.operators.rank import pin_cache
-    from pyspark.sql import Window
 
     edges = pin_cache(_strong_edges_both_dirs(spark, sf_dir))
     m = edges.count() // 2  # undirected edge count (list is symmetric)
-    labels = (
-        edges.select(F.col("src").alias("n"))
-        .distinct()
-        .select("n", F.col("n").alias("lab"))
-        .localCheckpoint()
-    )
-    w = Window.partitionBy("n2").orderBy(F.col("c").desc(), F.col("lab"))
-    for _ in range(_LPA_ROUNDS):
-        counts = (
-            edges.join(labels, edges["src"] == labels["n"])
-            .groupBy(F.col("dst").alias("n2"), "lab")
-            .agg(F.count("*").alias("c"))
-        )
-        labels = (
-            counts.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select(F.col("n2").alias("n"), "lab")
-            .localCheckpoint()
-        )
+    labels = _lpa_labels(edges)
     deg = edges.groupBy(F.col("src").alias("n")).agg(
         F.count("*").cast("bigint").alias("deg")
     )

@@ -244,12 +244,15 @@ FROM reach GROUP BY src
     "MinHash/SimHash banding: candidate pairs (here: shared 30-char prefix or "
     "suffix fingerprint, over documents plus two generations of mutated copies "
     "so components have diameter 3) must be transitively merged before picking "
-    "one survivor per cluster. Spark side: hash-min label propagation to "
-    "fixpoint (each round: min label over neighbors, persist, converge check — "
-    "the Pregel/GraphX formulation; at 100 TB swap in large-star/small-star to "
-    "bound skew on giant components). Oracle: DuckDB recursive-CTE reachability.",
+    "one survivor per cluster. Spark side: the hash-min operator shared by the "
+    "four clustering keys (operators/fixpoint.components; loud failure past 12 "
+    "rounds — the Pregel/GraphX formulation; at 100 TB swap in large-star/"
+    "small-star to bound skew on giant components). Oracle: DuckDB "
+    "recursive-CTE reachability.",
 )
 def dedup_cluster_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from cobradb_spark.operators.fixpoint import components
+
     base = load_table(spark, sf_dir, "documents").filter(F.col("n_chars") >= 80).select(
         "doc_id", "text"
     )
@@ -289,42 +292,12 @@ def dedup_cluster_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = half.union(
         half.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).persist()
-    labels = docs.select("doc_id", F.col("doc_id").alias("component_id")).persist()
-    for _ in range(12):  # diameter bound; converges in ~3 rounds here
-        neigh = (
-            edges.join(labels, edges.dst == labels.doc_id)
-            .groupBy("src")
-            .agg(F.min("component_id").alias("nmin"))
-        )
-        # One action per round: the changed flag rides along in the update
-        # DataFrame, so materializing the cache and testing convergence is
-        # a single job (no separate old-vs-new join).
-        new = (
-            labels.join(neigh, labels.doc_id == neigh.src, "left")
-            .select(
-                "doc_id",
-                F.least(
-                    "component_id", F.coalesce("nmin", F.col("component_id"))
-                ).alias("component_id"),
-                (F.coalesce("nmin", F.col("component_id")) < F.col("component_id")).alias(
-                    "_changed"
-                ),
-            )
-            .persist()
-        )
-        changed = new.agg(F.max("_changed")).first()[0]
-        labels.unpersist()
-        labels = new
-        if not changed:
-            break
+    # the mutation families have diameter 3; the round cap is generous
+    labels = components(
+        edges, docs.select("doc_id"), max_rounds=12, name="dedup_cluster_cc"
+    )
     edges.unpersist()
-    from cobradb_spark.operators.rank import pin
-
-    # the final labels cache must outlive this function (the caller still
-    # has to materialize the result) — hand it to the shared pin registry
-    # so harnesses release it after collection
-    pin(labels)
-    return labels.select("doc_id", "component_id")
+    return labels.select(F.col("n").alias("doc_id"), F.col("comp").alias("component_id"))
 
 
 @register(

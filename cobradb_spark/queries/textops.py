@@ -2588,8 +2588,9 @@ FROM ranked
     "bigrams (inverted-index posting join, never all-pairs), candidate "
     "pairs VERIFY with exact set Jaccard >= 0.5 (cross-multiplied to "
     "the integer predicate 2*|A∩B| >= |A∪B| — no float threshold), "
-    "verified pairs transitively merge via hash-min label propagation "
-    "(localCheckpoint rounds), and each cluster keeps its BEST member "
+    "verified pairs transitively merge via the hash-min operator shared by "
+    "the four clustering keys (operators/fixpoint.components), and each "
+    "cluster keeps its BEST member "
     "(longest text, tie on doc_id) — the survivorship rule a real "
     "pretraining dedup applies. Blocking uses word TRIgrams with a "
     "df<=64 stop-shingle cap (capped-Jaccard contract, identical both "
@@ -2603,6 +2604,8 @@ FROM ranked
     tags=("textops", "llm"),
 )
 def dedup_near_cluster_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from cobradb_spark.operators.fixpoint import components
+
     base = (
         load_table(spark, sf_dir, "documents")
         .filter(F.col("n_chars") >= 80)
@@ -2677,39 +2680,10 @@ def dedup_near_cluster_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).unionAll(
         near.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
     ).localCheckpoint()
-    labels = docs.select("doc_id", F.col("doc_id").alias("cluster_id")).localCheckpoint()
-    for _ in range(12):  # mutation-family diameter is 2; bound generous
-        neigh = (
-            ed.join(labels, ed.dst == labels.doc_id)
-            .groupBy("src")
-            .agg(F.min("cluster_id").alias("nmin"))
-        )
-        new = (
-            labels.join(neigh, labels.doc_id == neigh.src, "left")
-            .select(
-                "doc_id",
-                F.least(
-                    "cluster_id", F.coalesce("nmin", F.col("cluster_id"))
-                ).alias("cluster_id"),
-                (F.coalesce("nmin", F.col("cluster_id")) < F.col("cluster_id")).alias(
-                    "_ch"
-                ),
-            )
-            .localCheckpoint()
-        )
-        changed = new.agg(F.max("_ch")).first()[0]
-        labels = new.select("doc_id", "cluster_id")
-        if not changed:
-            break
-    else:
-        # r7 ADVICE: the uncapped recursive-CTE oracle always reaches
-        # the fixpoint; exiting unconverged would silently diverge on
-        # any near-dup chain longer than the assumed diameter.
-        raise RuntimeError(
-            "dedup_near_cluster_keep_best: hash-min CC did not converge "
-            "within 12 rounds — raise the round cap (near-dup chain "
-            "diameter exceeds it)"
-        )
+    # mutation-family diameter is 2; the round cap is generous
+    labels = components(
+        ed, docs.select("doc_id"), max_rounds=12, name="dedup_near_cluster_keep_best"
+    ).select(F.col("n").alias("doc_id"), F.col("comp").alias("cluster_id"))
     wk = Window.partitionBy("cluster_id").orderBy(
         F.length("text").desc(), "doc_id"
     )

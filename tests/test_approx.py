@@ -18,7 +18,7 @@ def test_approx_count_distinct_within_5pct(spark, sf_dir):
         assert r.approx_within_5pct is True
 
 
-def test_approx_distinct_dedup_rewrite_equivalence(spark):
+def test_approx_distinct_dedup_rewrite_equivalence(spark, sf_dir):
     """r15 rewrite invariant: running both aggregates over the DISTINCT
     (group, key) pairs is value-identical to the one-groupBy
     countDistinct + approx form — the HLL sketch is duplicate-insensitive
@@ -39,9 +39,7 @@ def test_approx_distinct_dedup_rewrite_equivalence(spark):
     )
     assert sorted(map(tuple, old.collect())) == sorted(map(tuple, new.collect()))
     # and the registered query itself stays self-grading green
-    out = registry.get_query("agg_approx_distinct").fn(
-        spark, "/root/testdata/sf0.001"
-    ).collect()
+    out = registry.get_query("agg_approx_distinct").fn(spark, sf_dir).collect()
     assert all(r.approx_within_5pct is True for r in out)
 
 

@@ -27,6 +27,7 @@ PROBE_KEYS = [
     "topk_global",
     "win_running_distinct",
     "graph_connected_components",
+    "dedup_cluster_cc",
     "text_bpe_apply",
     "dedup_sorted_neighborhood",
     # r6-continuation keys with partition-order exposure: integer-sum
