@@ -81,8 +81,8 @@ def _assert_events_ts_sane(events: DataFrame, sf_dir: str) -> None:
     _TS_SANITY_OK.add(key)
 
 
-# On-disk schema per (realpath'd parquet path, mtime_ns, size), captured
-# from the FIRST inferred read of that file in this process.  Subsequent
+# On-disk schema per realpath'd parquet path, captured from the FIRST
+# inferred read of that file in this process.  Subsequent
 # loads pass it back explicitly, which skips the footer-inference step
 # Spark otherwise repeats on every spark.read.parquet call (~130 ms ->
 # ~27 ms per load measured at sf0.1; every bench/driver timed run
@@ -90,13 +90,13 @@ def _assert_events_ts_sane(events: DataFrame, sf_dir: str) -> None:
 # query).  Cached schemas are exactly what inference produced for the
 # same file bytes, so plans and results are byte-identical; the
 # schema-sanity tripwires below still run against the inferred first
-# read.  The (mtime_ns, size) key components invalidate the entry when
-# the file (or dataset directory) is rewritten in-process (r14 verdict
-# item 7): a rewrite re-infers and re-runs the tripwires instead of
-# silently applying the stale schema.  The stat costs microseconds per
-# load.  At 100 TB the same discipline applies: resolve a table's
+# read.  Each entry also holds the (mtime_ns, size) it was inferred at;
+# when the file (or dataset directory) is rewritten in-process the stat
+# no longer matches, so the load re-infers, re-runs the tripwires and
+# replaces the entry — one entry per path, however often it is
+# rewritten.  The stat costs microseconds per load.  At 100 TB the same discipline applies: resolve a table's
 # schema once per process, not once per query (schemas.py design note).
-_FILE_SCHEMA_CACHE: dict[tuple[str, int, int], T.StructType] = {}
+_FILE_SCHEMA_CACHE: dict[str, tuple[int, int, T.StructType]] = {}
 
 
 def _read_parquet_cached_schema(
@@ -108,15 +108,15 @@ def _read_parquet_cached_schema(
     real = os.path.realpath(path)
     try:
         st = os.stat(real)
-        key = (real, st.st_mtime_ns, st.st_size)
+        stamp = (st.st_mtime_ns, st.st_size)
     except OSError:
         # missing path: let spark.read.parquet produce its own error
-        key = (real, -1, -1)
-    cached = _FILE_SCHEMA_CACHE.get(key)
-    if cached is not None:
-        return spark.read.schema(cached).parquet(path), False
+        stamp = (-1, -1)
+    cached = _FILE_SCHEMA_CACHE.get(real)
+    if cached is not None and cached[:2] == stamp:
+        return spark.read.schema(cached[2]).parquet(path), False
     df = spark.read.parquet(path)
-    _FILE_SCHEMA_CACHE[key] = df.schema
+    _FILE_SCHEMA_CACHE[real] = (*stamp, df.schema)
     return df, True
 
 

@@ -32,12 +32,15 @@ from pyspark.sql import functions as F
 #
 # RELEASE CONTRACT (round-4 ADVICE — this is module API, not an
 # implementation detail): every pin()/pin_cache() leaks a persisted
-# frame until release_rank_caches() runs.  The three harnesses
-# (__spark_entry__, tools/check.py, bench.py) call it after each query's
-# result is collected; any OTHER caller that materializes its result
-# outside those harnesses must call release_rank_caches() itself once
-# the result is collected.  Guarded by a lock: the registry is shared
-# module state and query builds may race from multiple threads.
+# frame until release_rank_caches() runs.  The repo's harnesses —
+# bench.py, tools/check.py, tools/bench_once.py, tools/op_sweep.py,
+# tools/scaling_probe.py and perfbench/worker.py — call it after each
+# query's result is collected.  __spark_entry__ does not: under the
+# external verify driver the pins live until its session ends.  Any
+# OTHER caller that materializes its result must call
+# release_rank_caches() itself once the result is collected.  Guarded
+# by a lock: the registry is shared module state and query builds may
+# race from multiple threads.
 _PINNED: list[DataFrame] = []
 _PINNED_LOCK = threading.Lock()
 

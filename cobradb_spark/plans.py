@@ -10,10 +10,13 @@ product" as an assertion, not a code-review hope.
 Counting is done on the FORMATTED explain output (node headers like
 "(12) BroadcastHashJoin"), which is stable across Spark 3.4-4.x and —
 unlike parsing the plan tree via py4j internals — versions gracefully.
+It is also the one place that renders a plan (formatted_plan) and
+reduces it to a run-independent fingerprint (canonical_plan_hash).
 """
 
 from __future__ import annotations
 
+import hashlib
 import re
 from dataclasses import dataclass, field
 
@@ -44,15 +47,85 @@ class PlanSummary:
     plan_text: str = ""
 
 
-def _formatted_plan(df: DataFrame) -> str:
+def formatted_plan(df: DataFrame) -> str:
+    """The text of `df.explain("formatted")`, returned instead of printed."""
     spark = df.sparkSession
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     return df._jdf.queryExecution().explainString(mode)
 
 
+# Run-varying tokens of a formatted plan, each with its stand-in:
+# expression, plan and RDD ids, paths, statistics, names drawn from
+# JVM-wide counters (common subexpressions, lambda variables), ML random
+# UIDs, and literal maps, which queries build from data collected while
+# they are built (e.g. operators/rank.py's per-partition offsets, whose
+# range boundaries come from a sample seeded by an RDD id).
+_PLAN_SCRUBS = (
+    (re.compile(r"#\d+"), "#x"),
+    (re.compile(r"plan_id=\d+"), "plan_id=x"),
+    (re.compile(r"RDD\[\d+\]"), "RDD[x]"),
+    (re.compile(r"map\(keys: \[[^\]]*\], values: \[[^\]]*\]\)"), "map(x)"),
+    (re.compile(r"Location: \S+ \[[^\]]*\]"), "Location: x"),
+    (re.compile(r"file:/[^\s,\]]+"), "file:x"),
+    (re.compile(r"Statistics\([^)]*\)"), "Statistics(x)"),
+    (re.compile(r"sizeInBytes=[^,)]+"), "sizeInBytes=x"),
+    # spark.range() splits into defaultParallelism, the core count
+    (re.compile(r"splits=Some\(\d+\)"), "splits=Some(n)"),
+    (re.compile(r"\b(_common_expr|[xyz])_\d+\b"), r"\1_n"),
+    (re.compile(r"_[0-9a-f]{12}\b"), "_uid"),
+)
+_PARTITIONING = re.compile(r"(?:hashpartitioning|rangepartitioning|RoundRobinPartitioning)\(")
+_TRAILING_COUNT = re.compile(r"\d+$")
+# A node's detail line, e.g. "Output [2]: [a#1, b#2]" or "Arguments: ...".
+_DETAIL = re.compile(r"^([A-Z][\w ]*(?: \[\d+\])?): (.*)$", re.MULTILINE)
+_TOKEN = re.compile(r"[\w#.$]+|\S")
+
+
+def _scrub_partition_counts(plan: str) -> str:
+    """Replace the partition count, the last argument of every
+    hash/range/round-robin partitioning, with `n`.  The count is
+    spark.sql.shuffle.partitions, which the session sizes to the core
+    count, so the same plan must not hash differently per machine."""
+    out: list[str] = []
+    i = 0
+    for m in _PARTITIONING.finditer(plan):
+        if m.start() < i:
+            continue
+        depth, k = 1, m.end()
+        while k < len(plan) and depth:
+            depth += {"(": 1, ")": -1}.get(plan[k], 0)
+            k += 1
+        if depth:  # unbalanced (truncated) tail: leave it as it is
+            break
+        args = _TRAILING_COUNT.sub("n", plan[m.end() : k - 1])
+        out.append(plan[i : m.end()] + args + ")")
+        i = k
+    out.append(plan[i:])
+    return "".join(out)
+
+
+def _sorted_detail(m: re.Match) -> str:
+    return m.group(1) + ": " + " ".join(sorted(_TOKEN.findall(m.group(2))))
+
+
+def canonical_plan_hash(plan: str) -> str:
+    """md5 of a formatted plan with its run-varying parts removed.
+
+    Equal hashes mean Catalyst chose the same plan.  The operator tree
+    is hashed in order; each node's detail lines (its output, keys,
+    functions, arguments) are hashed as sorted token lists, because
+    Catalyst enumerates some of them in JVM hash order — e.g. the
+    projections and gid numbering of the Expand that rewrites five or
+    more count-distincts differ from one JVM to the next."""
+    for pattern, repl in _PLAN_SCRUBS:
+        plan = pattern.sub(repl, plan)
+    plan = _DETAIL.sub(_sorted_detail, _scrub_partition_counts(plan))
+    return hashlib.md5(plan.encode()).hexdigest()
+
+
 def plan_summary(df: DataFrame) -> PlanSummary:
     """Summarize the physical plan Catalyst chose for `df`."""
-    text = _formatted_plan(df)
+    text = formatted_plan(df)
     s = PlanSummary(plan_text=text)
     for name in _NODE.findall(text):
         if name == "Exchange":

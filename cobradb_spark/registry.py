@@ -79,180 +79,34 @@ def _load() -> None:
     _LOADED = True
 
 
-# Driver-window rotation: the correctness driver hash-checks the FIRST
-# 50 entries of query_map() in iteration order, so ordering is part of
-# the verification contract.  History: r1-r2 exposed the leading 50
-# (flagship/scans/filters/joins + 3 aggregates); r3 exposed D4-K5; r4-r7
-# drained the never-checked backlog window by window (each round
-# executing the list staged by the previous one — CORRECTNESS_r04-r07).
-# Running total after r7: 291 distinct keys driver-checked, 92 never
-# checked, 2 open failures (win_max_drawdown, text_vocab_coverage: both
-# were value-EXACT locally; root cause was DuckDB HUGEINT window sums
-# surfacing as pandas float64 against Spark's int64 under the driver's
-# dtype-sensitive value-hash — fixed by CASTing every HUGEINT-derived
-# oracle output AS BIGINT, and tools/check.py now fails on dtype-class
-# mismatches so local EXACT implies driver-hashable again).
-#
-# Round 11 executed the r10-staged drain: CORRECTNESS_r11 landed 50/50
-# EXACT — after it, EVERY oracle-carrying key has a driver hash row
-# (437/437 green latest rows) and the only keys with no row at all are
-# the two rows-only ANN-hi points.
-#
-# Round 13 window (_DRIVER_PRIORITY below): slots 1-6 the r13-new keys
-# (text_char_entropy, stream_state_store_read, multimodal_magic_sniff,
-# pipeline_curate_multimodal, join_asof_forward,
-# analytics_stickiness_dau_mau — each locally hash-EXACT at sf0.01
-# under tools/check.py --plain), then the r4-era refresh staged last
-# round (_R13_REFRESH minus the three keys displaced to _R14_REFRESH
-# to make room) — exactly 50 slots, after which the only keys with
-# evidence older than r5 are the three displaced r4-era keys, staged
-# first for r14.  The r12
-# staging tuples below are kept verbatim: the monotone staging test
-# asserts against them and the r12 ledger they produced.
-#
-# Round 12 window (previous round), which executed the r11-staged
-# plan (r11 VERDICT items 2+3+6):
-#   * slot 1: pipeline_curate_corpus — the one r12-new key (end-to-end
-#     corpus curation composition; full DuckDB oracle).
-#   * slots 2-48: _R12_REFRESH — the 47 keys whose latest driver
-#     evidence was r2/r3 (all of E/F/G, most D/H/K, scan_csv_tsv,
-#     scan_json_lines).  After this window, no key's evidence predates
-#     r4.
-#   * slots 49-50: sim_ann_ivf_hi / sim_ann_ivf_pq_hi — the ONLY two
-#     registry keys with no driver row of any kind.  Rows-only by
-#     design (recall-graded companions hash-passed r11); spending two
-#     window slots on `no_oracle` rows (the J2/J4 r8 pattern)
-#     completes the 443/443 driver ledger (r11 VERDICT item 2).
-# Every oracle-carrying window key is locally EXACT at sf0.01 under
-# tools/check.py --window.  (_DRIVER_PRIORITY itself is assembled from
-# the named stage tuples below so the window cannot drift from the
-# staging lists the tests assert against.)
-
-# r12-new keys (the never-driver-checked drain head): every
-# oracle-carrying key added during r12 must be appended here AND given
-# a window slot; tests/test_registry.py asserts the recomputed
-# never-checked set stays a subset of this tuple, so new keys cannot
-# silently miss the drain path.
-_R12_NEW: tuple[str, ...] = (
-    "pipeline_curate_corpus",
-)
-
-# Rows-only keys deliberately spending window slots this round (driver
-# records `no_oracle` rows — completes the 443-key ledger).
-_R12_ROWSONLY: tuple[str, ...] = ("sim_ann_ivf_hi", "sim_ann_ivf_pq_hi")
-
-# The r3-era refresh executed by this round's window (kept as a named
-# tuple for the staging-integrity test and the r13 plan below).
-_R12_REFRESH: tuple[str, ...] = (
-    "join_lateral_topk", "join_null_safe", "join_outer_left_right_full", "join_self_hierarchy", "join_semi",
-    "join_shuffle_hash_hint", "join_shuffle_large",
-    "agg_approx_distinct", "scan_csv_tsv", "agg_conditional", "agg_first_last_ordered", "agg_grouping_sets", "agg_having", "agg_percentiles", "agg_stats", "array_higher_order", "conditional_null", "date_parts_trunc", "embed_vector_norm", "hash_reaction_dedup",
-    "json_extract_nested", "limit_offset", "map_ops", "math_suite",
-    "scan_json_lines", "set_except", "set_intersect", "set_union_all",
-    "set_union_distinct", "sort_multikey_nulls", "str_fuzzy_match",
-    "str_normalize_ids", "str_split_compartment", "text_stats",
-    "text_top_terms", "topk_global", "udaf_pandas_grouped_agg",
-    "udf_grouped_map_normalize", "udf_pandas_scalar", "udf_scalar_python",
-    "udtf_expand", "win_lag_lead", "win_nth_first_last",
-    "win_ntile_pctrank", "win_range_frame", "win_rank_topk_pergroup",
-    "win_running_frame",
-)
-
-# Staged r13 refresh plan (as executed): 44 of the 47 r4-era keys —
-# ts_autocorr, text_token_count, and text_unigram_perplexity were
-# displaced into _R14_REFRESH as the 4th-6th r13-new keys landed,
-# keeping the window at exactly 50.
-_R13_REFRESH: tuple[str, ...] = (
-    "agg_bitmap_distinct_rollup", "agg_collect_synonyms",
-    "agg_heavy_hitters", "agg_histogram_quantile_merge",
-    "agg_hll_intersect_estimate", "agg_hll_sketch_merge", "agg_pivot",
-    "analytics_copurchase_pairs", "analytics_rolling_distinct_users",
-    "array_ops", "cohort_retention", "decontam_ngram_overlap",
-    "dedup_cluster_cc", "dedup_cosine_near", "dedup_exact_hash",
-    "dedup_ngram_jaccard", "dedup_repeated_spans", "dedup_simhash",
-    "dedup_sorted_neighborhood", "dedup_url_canonical",
-    "embed_kmeans_cluster", "embed_quantize_int8",
-    "etl_dedup_incremental", "events_anomaly_mad",
-    "events_anomaly_zscore", "funnel_conversion", "funnel_time_bounded",
-    "join_bloom_prefilter", "join_interval_overlap",
-    "reshape_transpose", "reshape_unpivot", "segment_rfm",
-    "sessionize_events", "sim_cosine_topk", "str_regexp_extract_all",
-    "text_bpe_pair_counts", "text_feature_hashing",
-    "text_fingerprint_winnow", "text_inverted_index", "text_lang_id",
-    "text_pii_redact", "text_quality_score", "text_repetition_stats",
-    "text_tfidf_topk",
-)
-
-# r13-new keys (the never-driver-checked drain head): every
-# oracle-carrying key added during r13 must be appended here AND given
-# a window slot; tests/test_registry.py asserts the recomputed
-# never-checked set stays a subset of this tuple.
-_R13_NEW: tuple[str, ...] = (
-    "text_char_entropy",
-    "stream_state_store_read",
-    "multimodal_magic_sniff",
-    "pipeline_curate_multimodal",
-    "join_asof_forward",
-    "analytics_stickiness_dau_mau",
-)
-
-# r14-new keys (the never-driver-checked drain head for r14): the
-# embeddings-curation composition (r13 VERDICT item 3).  The _graded
-# key carries the full DuckDB oracle; the base key is rows-only by
-# design (KMeans cell assignment is seed-pinned but not
-# SQL-expressible — the J2/J4 pattern).
-_R14_NEW: tuple[str, ...] = ("pipeline_curate_embeddings_graded",)
-_R14_ROWSONLY: tuple[str, ...] = ("pipeline_curate_embeddings",)
-
-# Keys whose IMPLEMENTATION was rewritten in r14 (the window-skew fix:
-# text-keyed window-min dedup -> partial+final groupBy-min chains).
-# Their prior hash rows proved the OLD code; they re-prove this round.
-_R14_REPROOF: tuple[str, ...] = (
-    "pipeline_curate_corpus", "etl_llm_corpus_pipeline",
-)
-
-# Executed r14 refresh: the 46 oldest of the 53 keys staged last round
-# (3 r4-era + 50 r5-era; 7 displaced to _R15_REFRESH by the 4 slots
-# above) — after this window lands, no key's evidence predates r6
-# except the 7 displaced r5-era keys, staged first for r15.
-_R14_REFRESH: tuple[str, ...] = (
-    # r4-era keys displaced from the r13 window by the 4th-6th new keys
-    "ts_autocorr", "text_token_count", "text_unigram_perplexity",
-    "agg_argminmax", "agg_corr_matrix", "agg_countmin_freq",
-    "agg_listagg_ordered", "agg_mode", "agg_skew_kurt",
-    "agg_stats_higher", "agg_weighted_stats",
-    "analytics_pattern_match_journeys", "date_month_diff_exact",
-    "date_months_between", "dedup_containment_ngram",
-    "dq_validate_suite", "etl_corpus_mixture", "etl_k_anonymize",
-    "etl_pack_sequences", "etl_table_checksum", "json_variant_typed",
-    "math_bround", "multimodal_audio_decode", "multimodal_decode",
-    "multimodal_frame_sample", "multimodal_image_decode",
-    "multimodal_phash_dedup", "multimodal_video_frame_decode",
-    "rollup_hypertable", "scalars_try_safe", "set_intersect_except_all",
-    "sql_idle_rich_customers_q22", "sql_large_volume_in_q18",
-    "sql_top_supplier_scalar_q15", "sql_waiting_suppliers_q21",
-    "stream_cdc_upsert_view", "stream_chained_stateful_agg",
-    "stream_python_sink", "stream_python_source",
-    "stream_sessionize_stateful", "stream_stream_join",
-    "stream_trending_topk", "udaf_pandas_gmean",
-    "udf_arrow_optimized_scalar", "udf_cogrouped_map",
-    "udf_grouped_apply_arrow",
-)
-
-# Staged r15 refresh plan: the 7 r5-era keys displaced from the r14
-# window by the new/re-proof slots — after them, no key's evidence
-# predates r6.
-_R15_REFRESH: tuple[str, ...] = (
-    "udf_map_in_arrow", "udf_sql_declarative",
-    "udtf_polymorphic_analyze", "win_cume_dist", "win_ewma_smooth",
-    "win_islands_ranges", "win_running_distinct",
-)
-
-# The driver window is slots [:50]: the r14 drain head (1 new oracled
-# key + 1 declared rows-only + 2 rewritten-key re-proofs) followed by
-# the 46-key refresh staged last round.
+# The correctness driver hash-checks the FIRST 50 entries of
+# query_map() in iteration order, so this tuple's order is part of the
+# verification contract: all_queries() puts these keys first.  Keys
+# whose code changed since their latest driver row come first, then
+# the keys with the oldest driver evidence.
 _DRIVER_PRIORITY: tuple[str, ...] = (
-    _R14_NEW + _R14_ROWSONLY + _R14_REPROOF + _R14_REFRESH
+    # rewritten; latest driver row predates the new code
+    "analytics_bootstrap_ci", "agg_approx_distinct", "dedup_exactsubstr_cut",
+    "dedup_span_excise", "graph_hits_scores", "graph_bfs_levels",
+    "graph_sssp_weighted", "graph_connected_components", "dedup_cluster_cc",
+    "geo_dbscan_grid", "dedup_near_cluster_keep_best",
+    "graph_label_propagation", "graph_modularity_score", "graph_kcore_peel",
+    # oldest latest driver row first (CORRECTNESS_r05, then _r06 keys
+    # in registry order)
+    "udf_map_in_arrow", "udf_sql_declarative", "udtf_polymorphic_analyze",
+    "win_cume_dist", "win_ewma_smooth", "win_islands_ranges",
+    "win_running_distinct", "sql_forecast_revenue_q6",
+    "sql_volume_shipping_q7", "sql_market_share_q8", "sql_product_profit_q9",
+    "sql_promo_revenue_q14", "sql_parts_supplier_count_q16",
+    "sql_discount_revenue_or_q19", "sql_potential_promotion_q20",
+    "sql_shipmode_priority_q12", "etl_schema_evolution_merge",
+    "scan_gzip_jsonl", "agg_skew_salted_distinct", "multimodal_jpeg_decode",
+    "multimodal_png_decode", "etl_model_load", "etl_cdc_apply",
+    "etl_backfill_partition", "etl_compact_small_files",
+    "etl_incremental_join_refresh", "etl_snapshot_diff", "etl_fk_containment",
+    "etl_cascade_delete_plan", "rollup_gapfill", "etl_scd2_history",
+    "sample_hash_deterministic", "sample_stratified", "split_train_test",
+    "profile_table", "etl_shard_balanced",
 )
 
 

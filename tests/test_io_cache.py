@@ -1,8 +1,9 @@
 """Schema-cache invalidation (r14 verdict item 7 / ADVICE).
 
-_FILE_SCHEMA_CACHE is keyed on (realpath, mtime_ns, size): a file
-rewritten in-process must be re-inferred, not read with the stale
-cached schema.
+_FILE_SCHEMA_CACHE is keyed on realpath and stamps each entry with the
+file's (mtime_ns, size): a file rewritten in-process must be re-inferred,
+not read with the stale cached schema, and the re-inferred schema must
+replace the stale entry rather than sit beside it.
 """
 
 from __future__ import annotations
@@ -12,7 +13,7 @@ import os
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from cobradb_spark.io import load_table
+from cobradb_spark.io import _FILE_SCHEMA_CACHE, load_table
 
 
 def test_rewritten_file_reinfers_schema(spark, tmp_path):
@@ -26,6 +27,7 @@ def test_rewritten_file_reinfers_schema(spark, tmp_path):
     )
     df1 = load_table(spark, sf_dir, "customer")
     assert [f.name for f in df1.schema.fields] == ["c_custkey", "c_name"]
+    entries = len(_FILE_SCHEMA_CACHE)
 
     # rewrite with a different schema; force a distinct mtime_ns in case
     # the two writes land inside one clock tick
@@ -43,3 +45,7 @@ def test_rewritten_file_reinfers_schema(spark, tmp_path):
         "c_custkey", "c_name", "c_extra",
     ], "rewritten parquet must be re-inferred, not served a stale schema"
     assert df2.count() == 1
+    assert len(_FILE_SCHEMA_CACHE) == entries, (
+        "a rewrite must replace the path's cache entry, not add one"
+    )
+    assert os.path.realpath(path) in _FILE_SCHEMA_CACHE

@@ -6,6 +6,7 @@ from pyspark.sql import functions as F
 
 from cobradb_spark.io import load_table
 from cobradb_spark.operators.kmeans import kmeans_assign
+from cobradb_spark.plans import formatted_plan
 from cobradb_spark.registry import all_queries
 
 
@@ -334,10 +335,7 @@ def test_growth_lags_align(spark, sf_dir):
 
 def test_dpp_plan_has_dynamic_pruning(spark, sf_dir):
     df = all_queries()["join_dpp_partition_pruning"].fn(spark, sf_dir)
-    plan = df._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
-    assert "dynamicpruning" in plan
+    assert "dynamicpruning" in formatted_plan(df)
 
 
 def test_arrow_udf_uses_arrow_eval(spark, sf_dir):

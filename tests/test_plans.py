@@ -7,7 +7,13 @@ import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from cobradb_spark.plans import PlanAssertionError, assert_scale_safe, plan_summary
+from cobradb_spark.plans import (
+    PlanAssertionError,
+    assert_scale_safe,
+    canonical_plan_hash,
+    formatted_plan,
+    plan_summary,
+)
 
 
 def test_plan_summary_detects_broadcast_and_pushdown(spark, sf_dir):
@@ -150,11 +156,7 @@ def test_runtime_bloom_filter_injected_on_selective_join(spark, sf_dir):
             .groupBy("o_orderpriority")
             .count()
         )
-        plan = j._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted"
-            )
-        )
+        plan = formatted_plan(j)
         assert "bloom_filter_agg" in plan  # built on the selective dim side
         assert "might_contain" in plan  # applied on the fact probe side
         assert j.collect()  # and the filtered join still returns rows
@@ -178,3 +180,36 @@ def test_pipeline_curate_corpus_plan_is_scale_safe(spark, sf_dir):
     assert len(s.read_schemas) <= 2, (
         f"curated subtree re-evaluated: {len(s.read_schemas)} scans"
     )
+
+
+def test_plan_hash_ignores_shuffle_partition_count(spark, sf_dir):
+    """The session sizes spark.sql.shuffle.partitions to the core count,
+    which every hashpartitioning/rangepartitioning carries; the canonical
+    hash must not change with it, or plans/HASHES.json would differ per
+    machine."""
+    from cobradb_spark.registry import get_query
+
+    key = "spark.sql.shuffle.partitions"
+    saved = spark.conf.get(key)
+    plans = []
+    try:
+        for n in ("4", "7"):
+            spark.conf.set(key, n)
+            plans.append(formatted_plan(get_query("agg_basic").fn(spark, sf_dir)))
+    finally:
+        spark.conf.set(key, saved)
+    assert "hashpartitioning(" in plans[0] and plans[0] != plans[1]
+    assert canonical_plan_hash(plans[0]) == canonical_plan_hash(plans[1])
+
+
+def test_plan_hash_ignores_detail_order_not_tree_order():
+    """Catalyst lists some node details in JVM hash order (the Expand
+    behind five or more count-distincts numbers its projections
+    differently per JVM), so detail lines hash as token multisets; the
+    operator tree still hashes in order."""
+    tree = "== Physical Plan ==\nHashAggregate (3)\n+- Expand (2)\n   +- Scan parquet  (1)\n\n"
+    a = tree + "(2) Expand\nArguments: [[a#1, null, 1], [null, b#2, 2]], [a#3, b#4, gid#5]\n"
+    b = tree + "(2) Expand\nArguments: [[null, b#7, 1], [a#6, null, 2]], [b#8, a#9, gid#10]\n"
+    assert canonical_plan_hash(a) == canonical_plan_hash(b)
+    swapped = tree.replace("HashAggregate (3)\n+- Expand (2)", "Expand (3)\n+- HashAggregate (2)")
+    assert canonical_plan_hash(swapped + a[len(tree):]) != canonical_plan_hash(a)

@@ -49,106 +49,42 @@ def test_entry_contract_shapes():
 
 
 def test_driver_window_shape():
-    """The correctness driver checks the FIRST 50 queries() entries, so
-    ordering is part of the verification contract.  The r14 window is
-    assembled from named stage tuples: the new-key drain head (_R14_NEW
-    + the declared rows-only _R14_ROWSONLY), the two rewritten-key
-    re-proofs (_R14_REPROOF — their prior hash rows proved the OLD
-    window-min code), then the oldest-evidence refresh staged last
-    round (_R14_REFRESH, 46 of 53; the rest displaced to
-    _R15_REFRESH).  Every slot except the declared rows-only key is
-    oracle-carrying."""
-    from cobradb_spark import registry
+    """The correctness driver hash-checks the FIRST 50 queries()
+    entries, so the window is part of the verification contract: it is
+    exactly _DRIVER_PRIORITY, 50 unique registered keys, each carrying
+    a DuckDB oracle (a window slot without one is not a hash check)."""
+    import __spark_entry__ as E
 
     qs = registry.all_queries()
-    window = list(qs)[:50]
-    assert window == list(registry._DRIVER_PRIORITY)[:50], (
-        "driver window must be exactly the first 50 of the rotated priority list"
-    )
-    assert window == list(
-        registry._R14_NEW
-        + registry._R14_ROWSONLY
-        + registry._R14_REPROOF
-        + registry._R14_REFRESH
-    ), "window must be exactly new-head + re-proofs + staged refresh"
-    for name in window:
-        if name in registry._R14_ROWSONLY:
-            assert qs[name].oracle is None, f"{name} declared rows-only but has oracle"
-        else:
-            assert qs[name].oracle is not None, f"{name} in driver window without oracle"
-    # nothing past the window: every slot this round is a hash check
-    assert list(registry._DRIVER_PRIORITY)[50:] == []
-
-
-def _driver_checked_keys():
-    """Union of keys with any driver row across CORRECTNESS_r*.json."""
-    import json
-    from pathlib import Path
-
-    checked: set[str] = set()
-    for p in sorted(Path(__file__).resolve().parent.parent.glob("CORRECTNESS_r*.json")):
-        checked.update(json.loads(p.read_text()))
-    return checked
-
-
-def test_window_drains_backlog_and_next_round_is_staged():
-    """Staging integrity, written MONOTONE so it stays true both before
-    AND after the current round's driver artifact lands (the r11 lesson:
-    `set(staged) == never_checked` flipped false the moment the driver
-    wrote CORRECTNESS_r11.json).  Driver rows only accumulate, so every
-    assertion here is of the form `shrinking_set <= staged_constant`:
-
-      * never-checked oracle keys  ⊆  _R14_NEW        (can only shrink)
-      * keys with evidence ≤ r5    ⊆  window ∪ _R15   (can only shrink;
-        after the r14 window lands only the 7 displaced r5-era keys in
-        _R15_REFRESH remain pre-r6)
-      * staged refresh keys all registered with prior rows (rows never
-        disappear, registration is append-only)
-    """
-    from cobradb_spark import registry
-
-    qs = registry.all_queries()
-    staged_new = list(registry._R14_NEW + registry._R14_ROWSONLY)
-    assert len(staged_new) == len(set(staged_new)), "duplicate keys in new-key drain list"
-    missing = [n for n in staged_new if n not in qs]
-    assert not missing, f"staged new keys not registered: {missing}"
-
-    checked = _driver_checked_keys()
-    window = list(registry._DRIVER_PRIORITY)[:50]
+    window = list(registry._DRIVER_PRIORITY)
+    assert list(qs)[:50] == window
+    assert list(E.queries())[:50] == window
     assert len(set(window)) == 50, "duplicate keys in the driver window"
-    never_checked = {
-        n for n, q in qs.items() if q.oracle is not None and n not in checked
-    }
-    # every never-checked oracle key is staged in the new-key head (the
-    # head may already be drained — subset, not equality)
-    assert never_checked <= set(staged_new), (
-        f"oracle keys missing from the drain head: "
-        f"{sorted(never_checked - set(staged_new))}"
-    )
-    assert set(staged_new) <= set(window), "new-key head not in the window"
-    # refresh and re-proof slots must already HAVE driver rows (they
-    # re-run, they don't drain the backlog)
-    for n in registry._R14_REFRESH + registry._R14_REPROOF:
-        assert n in qs, f"refresh key {n} not registered"
-        assert n in checked, f"window refresh key {n} has no prior driver row"
-    # next round's staging: registered, has prior rows, disjoint from
-    # the current window
-    r15 = list(registry._R15_REFRESH)
-    assert len(r15) == len(set(r15)), "duplicate keys in r15 staging"
-    for n in r15:
-        assert n in qs, f"r15 refresh key {n} not registered"
-        assert n in checked, f"r15 refresh key {n} has no prior driver row"
-        assert n not in window, f"r15 refresh key {n} already in the r14 window"
-    # nothing stale is forgotten — monotone: a driver run only RAISES a
-    # key's latest round, so these stale sets only shrink
+    for name in window:
+        assert qs[name].oracle is not None, f"{name} in driver window without oracle"
+
+
+def _latest_driver_round() -> dict[str, int]:
+    """key -> the latest round with a row in any CORRECTNESS_r*.json."""
     import json
     from pathlib import Path
 
     latest: dict[str, int] = {}
-    for p in sorted(Path(__file__).resolve().parent.parent.glob("CORRECTNESS_r*.json")):
+    for p in Path(__file__).resolve().parent.parent.glob("CORRECTNESS_r*.json"):
         rnd = int(p.stem.split("_r")[1])
         for k in json.loads(p.read_text()):
-            latest[k] = rnd
-    stale_r5 = {k for k, r in latest.items() if r <= 5 and k in qs}
-    uncovered = stale_r5 - set(window) - set(r15)
-    assert not uncovered, f"stale keys neither in window nor r15: {sorted(uncovered)}"
+            latest[k] = max(latest.get(k, 0), rnd)
+    return latest
+
+
+def test_window_covers_unchecked_and_stale_keys():
+    """Monotone in the driver's artifacts (rows only accumulate, so
+    both sets below only shrink): every oracle key with no driver row,
+    and every key whose latest row is r5 or older, is in the window."""
+    qs = registry.all_queries()
+    window = set(registry._DRIVER_PRIORITY)
+    latest = _latest_driver_round()
+    never_checked = {n for n, q in qs.items() if q.oracle is not None and n not in latest}
+    assert never_checked <= window, sorted(never_checked - window)
+    stale = {n for n in qs if latest.get(n, 99) <= 5}
+    assert stale <= window, sorted(stale - window)

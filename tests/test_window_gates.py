@@ -20,6 +20,8 @@ import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from cobradb_spark.plans import formatted_plan
+
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
@@ -45,15 +47,8 @@ def docs(spark, sf_dir):
     )
 
 
-def _fmt(df):
-    spark = df.sparkSession
-    return df._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
-
-
 def _violations(gates, df):
-    return gates._skewed_window_violations("t", _fmt(df))
+    return gates._skewed_window_violations("t", formatted_plan(df))
 
 
 def test_catches_sha_content_window(gates, docs):
@@ -120,7 +115,7 @@ def test_clean_numeric_derived_key_passes(gates, docs):
 
 def test_allowlist_suppresses(gates, docs):
     df = docs.withColumn("k", F.min("doc_id").over(Window.partitionBy("text")))
-    plan = _fmt(df)
+    plan = formatted_plan(df)
     assert gates._skewed_window_violations("t", plan)
     gates._SKEWED_WINDOW_OK["t"] = "test"
     try:
@@ -133,7 +128,7 @@ def test_unpartitioned_gate_still_catches(gates, docs):
     """The sibling gate: a global window with no partition and no
     structural bound funnels all rows through one task."""
     df = docs.withColumn("r", F.row_number().over(Window.orderBy("doc_id")))
-    assert gates._unpartitioned_window_violations("t", _fmt(df))
+    assert gates._unpartitioned_window_violations("t", formatted_plan(df))
 
 
 def test_unpartitioned_gate_accepts_bounded(gates, docs):
@@ -142,4 +137,4 @@ def test_unpartitioned_gate_accepts_bounded(gates, docs):
         .withColumn("r", F.row_number().over(Window.orderBy("doc_id")))
         .limit(10)
     )
-    assert not gates._unpartitioned_window_violations("t", _fmt(df))
+    assert not gates._unpartitioned_window_violations("t", formatted_plan(df))

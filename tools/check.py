@@ -177,13 +177,7 @@ def main() -> int:
     ap.add_argument(
         "--window",
         action="store_true",
-        help="check exactly the staged driver window (_DRIVER_PRIORITY)",
-    )
-    ap.add_argument(
-        "--staged",
-        action="store_true",
-        help="check exactly the current round's drain head (new keys + "
-        "declared rows-only + rewritten-key re-proofs)",
+        help="check exactly the driver window (_DRIVER_PRIORITY)",
     )
     args = ap.parse_args()
 
@@ -191,10 +185,6 @@ def main() -> int:
     names = args.names or sorted(qs)
     if args.window:
         names = list(registry._DRIVER_PRIORITY)
-    elif args.staged:
-        names = list(
-            registry._R14_NEW + registry._R14_ROWSONLY + registry._R14_REPROOF
-        )
     unknown = [n for n in names if n not in qs]
     if unknown:
         print(f"unknown queries: {unknown}", file=sys.stderr)

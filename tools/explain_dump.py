@@ -1,11 +1,13 @@
-"""Dump .explain("formatted") for registry keys to plans/<tag>/ files.
+"""Dump .explain("formatted") for registry keys to <out_dir>/ files.
 
 Usage:
   python tools/explain_dump.py <out_dir> <suffix> key [key ...]
-  python tools/explain_dump.py plans/r14 before agg_basic join_topn_flagship
+  python tools/explain_dump.py /tmp/plans before agg_basic join_topn_flagship
 
 Writes <out_dir>/<key>_<suffix>.txt per key.  Planning only — no jobs
-run — so this is cheap and safe to run alongside other sessions.
+run — so this is cheap and safe to run alongside other sessions.  The
+committed record of every key's plan is its hash in plans/HASHES.json
+(tools/plan_audit.py); this tool gives the full text behind a hash.
 """
 
 from __future__ import annotations
@@ -16,6 +18,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from cobradb_spark import registry
+from cobradb_spark.plans import formatted_plan
 from cobradb_spark.session import get_spark
 
 SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -28,10 +31,7 @@ def main() -> int:
     spark = get_spark("explain-dump")
     qs = registry.all_queries()
     for key in keys:
-        df = qs[key].fn(spark, SF)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
+        plan = formatted_plan(qs[key].fn(spark, SF))
         path = os.path.join(out_dir, f"{key}_{suffix}.txt")
         with open(path, "w") as f:
             f.write(f"# {key} — explain('formatted') at {SF}\n\n")

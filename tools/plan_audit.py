@@ -1,32 +1,42 @@
 """Physical-plan audit — the 100 TB posture gate (SURVEY §4.2).
 
-Captures .explain("formatted") for representative queries and asserts
-the scale-critical plan properties:
+One pass, no flags.  Builds every registry key's plan once at sf0.01
+and checks it:
 
-  - column pruning reached the parquet scan (ReadSchema),
-  - predicate pushdown reached the scan (PushedFilters),
-  - dimension joins broadcast (BroadcastHashJoin),
-  - the interval join is a hash join on the bin key, NOT a
-    BroadcastNestedLoopJoin,
-  - aggregations are partial+final (map-side combine),
-  - top-k plans use TakeOrderedAndProject (no global sort).
+  - the key's AUDITS entries, which pin scale-critical properties:
+    column pruning and predicate pushdown reach the parquet scan,
+    dimension joins broadcast, the interval join is a hash join on
+    the bin key (no BroadcastNestedLoopJoin), aggregations are
+    partial+final, top-k plans use TakeOrderedAndProject;
+  - the two standing window gates (no unpartitioned Window over
+    unbounded input, no Window partitioned by a text-derived key);
+  - the SMJ gate: big-big joins plan SortMergeJoin with the
+    shuffled-hash size guard made unsatisfiable.
 
-Writes PLANS.md with the annotated plans; exits non-zero if any
-assertion fails.  Run: python tools/plan_audit.py
+Writes plans/HASHES.json, one line per key with its canonical plan hash
+(cobradb_spark.plans.canonical_plan_hash) and verdict, and exits
+non-zero if any check fails.  `git diff plans/HASHES.json` is the plan
+drift report; tools/explain_dump.py prints the full plan of any key.
+
+Run: python tools/plan_audit.py   (test data root: $SPARK_GRAFT_TESTDATA)
 """
 
 from __future__ import annotations
 
+import json
 import os
 import re
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from cobradb_spark import registry
+from cobradb_spark.plans import canonical_plan_hash, formatted_plan
 from cobradb_spark.session import get_spark
 
-SF = "/root/testdata/sf0.01"
+SF = os.path.join(os.environ.get("SPARK_GRAFT_TESTDATA", "/root/testdata"), "sf0.01")
+HASHES = os.path.join(REPO, "plans", "HASHES.json")
 
 # (query, [must_contain], [must_not_contain], note)
 AUDITS = [
@@ -1264,7 +1274,7 @@ AUDITS = [
     ),
     # ---- the 10 TPC-H shapes the r6 audit pass missed (q2 q7 q9 q11
     # q12 q13 q14 q16 q19 q20) — with these, all 22 classic shapes have
-    # PLANS.md entries asserting their documented plan property.
+    # AUDITS entries asserting their documented plan property.
     (
         "sql_min_cost_supplier_q2",
         ["BroadcastHashJoin", "Window", "SCANS<=5"],
@@ -1890,7 +1900,7 @@ _UNPARTITIONED_WINDOW_OK: dict[str, str] = {
     "events_stl_strength": "window over the bounded seasonal-period grid",
     # the lag window runs over the MONTHLY revenue rollup (one row per
     # distinct order month — calendar-bounded, ~84 at any SF), never
-    # raw orders; found by the r14 --gates-all full-registry sweep
+    # raw orders; found by the full-registry window-gate sweep
     "rollup_growth_mom_yoy": "lag window over the month-grain rollup grid",
     # found by the r14 paren-balance fix to THIS gate (the original
     # one-level regex could not parse unboundedpreceding$()/currentrow$()
@@ -2099,46 +2109,7 @@ def _unpartitioned_window_violations(name: str, plan: str) -> list[str]:
     return out
 
 
-def gates_all() -> int:
-    """Full-registry sweep of the two STRUCTURAL window gates
-    (unpartitioned-window and skewed-text-partition) over every
-    registered key's plan — not just the AUDITS entries.  The r13
-    skewed-window gate caught a second J8-hazard instance
-    (etl_llm_corpus_pipeline) only because that key happened to be
-    audited; this mode closes the coverage gap for keys without a
-    per-key audit entry.  Streaming keys whose builders return
-    streaming DataFrames are planned the same way (explainString works
-    pre-start); keys that raise during plan BUILD are reported too.
-    """
-    spark = get_spark("plan_audit_gates")
-    qs = registry.all_queries()
-    failures: list[str] = []
-    n_ok = 0
-    for name, q in qs.items():
-        try:
-            df = q.fn(spark, SF)
-            plan = df._jdf.queryExecution().explainString(
-                spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                    "formatted"
-                )
-            )
-        except Exception as e:  # noqa: BLE001 — report, keep sweeping
-            failures.append(f"{name}: plan build failed: {type(e).__name__}: {e}")
-            continue
-        msgs = _unpartitioned_window_violations(name, plan)
-        msgs += _skewed_window_violations(name, plan)
-        failures.extend(msgs)
-        n_ok += not msgs
-    if failures:
-        print("WINDOW-GATE SWEEP FAILURES:")
-        for x in failures:
-            print(" -", x)
-        return 1
-    print(f"window-gate sweep OK: {n_ok}/{len(qs)} keys clean")
-    return 0
-
-
-def _smj_degradation_gate(spark, qs) -> tuple[list[str], str]:
+def _smj_degradation_gate(spark, qs) -> dict[str, list[str]]:
     """Big-big joins must degrade to SortMergeJoin when SHJ's size
     conditions fail (r14 verdict item 5).
 
@@ -2154,126 +2125,119 @@ def _smj_degradation_gate(spark, qs) -> tuple[list[str], str]:
     SHJ unconditional under preferSortMergeJoin=false would fail this
     gate instead of OOMing at scale.
     """
-    keys = ("join_shuffle_large", "join_outer_left_right_full")
-    fails: list[str] = []
-    lines: list[str] = []
+    fails: dict[str, list[str]] = {}
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        for name in keys:
-            plan = qs[name].fn(spark, SF)._jdf.queryExecution().explainString(
-                spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                    "formatted"
-                )
-            )
+        for name in ("join_shuffle_large", "join_outer_left_right_full"):
+            plan = formatted_plan(qs[name].fn(spark, SF))
+            msgs = fails.setdefault(name, [])
             if "SortMergeJoin" not in plan:
-                fails.append(
+                msgs.append(
                     f"{name}: expected SortMergeJoin with SHJ size guard "
                     "disabled (autoBroadcastJoinThreshold=-1)"
                 )
             if "ShuffledHashJoin" in plan:
-                fails.append(
+                msgs.append(
                     f"{name}: ShuffledHashJoin chosen despite the size "
                     "guard being unsatisfiable — OOM risk at scale"
                 )
-            lines.append(f"- `{name}`: SortMergeJoin ✓")
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    section = (
-        "## SMJ degradation gate (preferSortMergeJoin=false posture)\n\n"
-        "With `autoBroadcastJoinThreshold=-1` (SHJ size guard "
-        "unsatisfiable, broadcasts off), the big-big shapes must fall "
-        "back to SortMergeJoin — the graceful-degradation property the "
-        "global SHJ preference relies on at 100 TB:\n\n" + "\n".join(lines) + "\n"
-    )
-    return fails, section
+    return fails
+
+
+def _audit_violations(name: str, plan: str, must, must_not) -> list[str]:
+    out: list[str] = []
+    for frag in must:
+        if frag.startswith("EXCHANGES<="):
+            # count Exchange operators in the numbered detail section, not
+            # the tree rendering (each op appears once as "(N) Exchange")
+            n = sum(
+                1
+                for l in plan.splitlines()
+                if l.strip().endswith("Exchange") and l.strip().startswith("(")
+            )
+            if n > int(frag.split("<=")[1]):
+                out.append(f"{name}: {n} exchanges, wanted {frag}")
+        elif frag.startswith("SCANS<="):
+            # count scan operators in the numbered detail section —
+            # pins subtree-reuse properties (e.g. q2's single
+            # evaluation of its cost CTE)
+            n = sum(
+                1
+                for l in plan.splitlines()
+                if l.strip().startswith("(") and "Scan parquet" in l
+            )
+            if n > int(frag.split("<=")[1]):
+                out.append(f"{name}: {n} scans, wanted {frag}")
+        elif frag not in plan:
+            out.append(f"{name}: expected {frag!r} in plan")
+    for frag in must_not:
+        if frag in plan:
+            out.append(f"{name}: forbidden {frag!r} present in plan")
+    return out
 
 
 def main() -> int:
     spark = get_spark("plan_audit")
     qs = registry.all_queries()
-    failures: list[str] = []
-    sections: list[str] = []
-    for name, must, must_not, note in AUDITS:
-        df = qs[name].fn(spark, SF)
-        plan = df._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-        )
-        for frag in must:
-            if frag.startswith("EXCHANGES<="):
-                # count Exchange operators in the numbered detail section, not
-                # the tree rendering (each op appears once as "(N) Exchange")
-                n = sum(
-                    1
-                    for l in plan.splitlines()
-                    if l.strip().endswith("Exchange") and l.strip().startswith("(")
-                )
-                if n > int(frag.split("<=")[1]):
-                    failures.append(f"{name}: {n} exchanges, wanted {frag}")
-                continue
-            if frag.startswith("SCANS<="):
-                # count scan operators in the numbered detail section —
-                # pins subtree-reuse properties (e.g. q2's single
-                # evaluation of its cost CTE)
-                n = sum(
-                    1
-                    for l in plan.splitlines()
-                    if l.strip().startswith("(") and "Scan parquet" in l
-                )
-                if n > int(frag.split("<=")[1]):
-                    failures.append(f"{name}: {n} scans, wanted {frag}")
-                continue
-            if frag not in plan:
-                failures.append(f"{name}: expected {frag!r} in plan")
-        for frag in must_not:
-            if frag in plan:
-                failures.append(f"{name}: forbidden {frag!r} present in plan")
-        for msg in _unpartitioned_window_violations(name, plan):
-            failures.append(msg)
-        for msg in _skewed_window_violations(name, plan):
-            failures.append(msg)
-        sections.append(f"## {name}\n\n{note}\n\n```\n{plan.strip()}\n```\n")
+    audits: dict[str, list[tuple[list[str], list[str]]]] = {}
+    for name, must, must_not, _note in AUDITS:
+        audits.setdefault(name, []).append((must, must_not))
+    unknown = sorted(set(audits) - set(qs))
+    if unknown:
+        print(f"AUDITS names not registered: {unknown}")
+        return 1
 
-    smj_fails, smj_section = _smj_degradation_gate(spark, qs)
-    failures.extend(smj_fails)
-    sections.append(smj_section)
+    failures: dict[str, list[str]] = {}
+    hashes: dict[str, str | None] = {}
+    for name, q in qs.items():
+        # streaming builders plan the same way (explainString works
+        # before start); a key that raises while building is a failure
+        try:
+            plan = formatted_plan(q.fn(spark, SF))
+        except Exception as e:  # noqa: BLE001 — report, keep sweeping
+            hashes[name] = None
+            failures[name] = [f"{name}: plan build failed: {type(e).__name__}: {e}"]
+            continue
+        hashes[name] = canonical_plan_hash(plan)
+        msgs = [
+            m
+            for must, must_not in audits.get(name, ())
+            for m in _audit_violations(name, plan, must, must_not)
+        ]
+        msgs += _unpartitioned_window_violations(name, plan)
+        msgs += _skewed_window_violations(name, plan)
+        failures[name] = msgs
+    for name, msgs in _smj_degradation_gate(spark, qs).items():
+        failures[name] += msgs
 
-    header = (
-        "# PLANS — physical-plan audit (generated by tools/plan_audit.py)\n\n"
-        "Asserted scale properties: column pruning + predicate pushdown reach "
-        "the parquet scans, dimension joins broadcast, the interval join is a "
-        "binned hash join (no nested loop), aggregation is partial+final, "
-        "top-k uses TakeOrderedAndProject. Re-generate after plan-affecting "
-        "changes.\n\n"
-        "Standing gate (r8 VERDICT item 8): every audited plan is also "
-        "checked structurally for an unpartitioned Window (a "
-        "windowspecdefinition whose first component is already an ORDER "
-        "column) over input with no structural bound (no TakeOrdered/"
-        "GlobalLimit/CollectLimit in the plan) — the single-task 100 TB "
-        "cliff. Exceptions live in _UNPARTITIONED_WINDOW_OK with a "
-        "justification each.\n\n"
-        "CBO note (SURVEY §4.2): the cost-based-optimizer path is exercised "
-        "by tests/test_plans.py::test_cbo_catalog_stats_drive_join_reorder — "
-        "ANALYZE TABLE on real catalog tables populates row/column stats and "
-        "spark.sql.cbo.enabled + joinReorder demonstrably re-orders a 4-table "
-        "join by cost. The registry queries themselves read parquet as temp "
-        "views, which cannot carry catalog statistics (no catalog entry), so "
-        "their plans rely on size-based AQE + the explicit broadcast gates "
-        "audited below; a 100 TB deployment would ANALYZE its catalog tables "
-        "and get the CBO reordering on top.\n\n"
-    )
-    with open(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md"), "w") as f:
-        f.write(header + "\n".join(sections))
-    if failures:
+    def verdict(name: str) -> str:
+        if failures[name]:
+            return "FAIL"
+        return "OK" if name in audits else "OK (gates only)"
+
+    os.makedirs(os.path.dirname(HASHES), exist_ok=True)
+    with open(HASHES, "w") as f:
+        rows = [
+            f"{json.dumps(n)}: "
+            + json.dumps({"hash": hashes[n], "verdict": verdict(n)})
+            for n in sorted(qs)
+        ]
+        f.write("{\n" + ",\n".join(rows) + "\n}\n")
+    failed = [m for n in sorted(failures) for m in failures[n]]
+    if failed:
         print("PLAN AUDIT FAILURES:")
-        for x in failures:
+        for x in failed:
             print(" -", x)
         return 1
-    print(f"plan audit OK: {len(AUDITS)} queries, PLANS.md written")
+    print(
+        f"plan audit OK: {len(qs)} keys planned, {len(audits)} with AUDITS "
+        f"entries, window and SMJ gates clean; {os.path.relpath(HASHES, REPO)} written"
+    )
     return 0
 
 
 if __name__ == "__main__":
-    if "--gates-all" in sys.argv:
-        sys.exit(gates_all())
     sys.exit(main())
