@@ -1,8 +1,13 @@
-"""Distributed global row-number — the scale-safe ranking primitive.
+"""Distributed ranks and prefix sums — the scale-safe ranking primitives.
 
 A plain `row_number() OVER (ORDER BY ...)` funnels every row through ONE
 partition (Catalyst plans a single-partition window) — the classic
-100 TB cliff.  This operator computes the identical rank distributed:
+100 TB cliff.  This module computes the same statistics distributed, in
+two shapes chosen by what the consumer does with the rank.
+
+Per-row consumers (a quantile pick, a running maximum, ntile, a
+winsorized cut) need the rank or prefix ON each row.  global_rank,
+global_prefix_sum(s) and friends compute it with a range partition:
 
 1. `repartitionByRange` on the order keys — partition i holds a
    contiguous, disjoint key range, ranges ascending with partition id;
@@ -14,7 +19,15 @@ partition (Catalyst plans a single-partition window) — the classic
 
 Ties must be fully broken by the order keys (callers append a unique
 key), which makes the result independent of where the sampled range
-boundaries happen to fall.
+boundaries happen to fall.  The sampled frame is persisted and pinned
+(see the RELEASE CONTRACT below) and the offsets cost driver collects.
+
+Linear consumers (a Mann-Whitney rank sum, Gini's sum of rank * x) only
+SUM the rank against a weight.  prefix_dot serves them inside one plan:
+rows bucket by a pure function of the first order key, a window per
+(group, bucket) gives the in-bucket prefix, and a window over the small
+per-bucket table gives each bucket its offset.  No sampling, no persist,
+no collect: building the frame runs no Spark job.
 """
 
 from __future__ import annotations
@@ -35,7 +48,10 @@ from pyspark.sql import functions as F
 # frame until release_rank_caches() runs.  The repo's harnesses —
 # bench.py, tools/check.py, tools/bench_once.py, tools/op_sweep.py,
 # tools/scaling_probe.py and perfbench/worker.py — call it after each
-# query's result is collected.  __spark_entry__ does not: under the
+# query's result is collected; tools/plan_audit.py and
+# tools/explain_dump.py after each key's plan.  No query build calls
+# it: that would drain pins another built-but-unexecuted query still
+# relies on.  __spark_entry__ does not: under the
 # external verify driver the pins live until its session ends.  Any
 # OTHER caller that materializes its result must call
 # release_rank_caches() itself once the result is collected.  Guarded
@@ -320,3 +336,67 @@ def global_prefix_sum(
     if with_frame:
         return out, tagged
     return out
+
+
+# prefix_dot buckets rows by `order_cols[0] >> _BUCKET_SHIFT`.  The
+# bucket is a pure function of the row, so any recompute, partitioning
+# or AQE choice buckets alike; 2^16 key units per bucket (about $655 of
+# cents) keeps the bucket table — the input of the offset window — at
+# (key range >> 16) rows per group, whatever the row count.
+_BUCKET_SHIFT = 16
+
+
+def prefix_dot(
+    df: DataFrame,
+    group_cols: list[str],
+    order_cols: list[str],
+    c: str,
+    w: str,
+    sums: tuple[str, ...] = (),
+) -> DataFrame:
+    """One row per group: `dot` = sum_i w_i * (sum of c_j over the rows
+    j before i in the group), as DECIMAL(38,0), plus `sum(x)` for each
+    column x in `sums`.
+
+    The exclusive prefix of `c` is never materialized per row: a window
+    PARTITION BY (group, bucket) ORDER BY order_cols gives the in-bucket
+    prefix, a per-(group, bucket) aggregate folds it into sum(w * prefix)
+    with the bucket's sum(c) and sum(w), and a window PARTITION BY group
+    ORDER BY bucket over that bucket table gives each bucket the sum of c
+    before it, so dot = sum(w * prefix) + sum_b sum(w)_b * offset_b.
+
+    `order_cols` must define a TOTAL order within each group and its
+    first column must be integral (the bucket is its value >> 16)."""
+    dec = "decimal(38,0)"
+    in_bucket = (
+        Window.partitionBy(*group_cols, "_b")
+        .orderBy(*order_cols)
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    buckets = (
+        df.withColumn("_b", F.shiftright(F.col(order_cols[0]), _BUCKET_SHIFT))
+        .withColumn("_loc", F.coalesce(F.sum(c).over(in_bucket), F.lit(0)))
+        .groupBy(*group_cols, "_b")
+        .agg(
+            F.sum(F.col(w).cast(dec) * F.col("_loc")).alias("_wl"),
+            F.sum(c).alias("_sc"),
+            F.sum(w).alias("_sw"),
+            *[F.sum(x).alias(x) for x in sums],
+        )
+    )
+    before = (
+        Window.partitionBy(*group_cols)
+        .orderBy("_b")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    off = F.coalesce(F.sum("_sc").over(before), F.lit(0))
+    return (
+        buckets.withColumn("_off", off)
+        .groupBy(*group_cols)
+        .agg(
+            F.sum(F.col("_wl") + F.col("_sw").cast(dec) * F.col("_off"))
+            .cast(dec)
+            .alias("dot"),
+            *[F.sum(x).alias(x) for x in sums],
+        )
+    )

@@ -563,10 +563,7 @@ FROM res, nn GROUP BY nn.n
 def agg_quantile_exact_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     import math
 
-    from cobradb_spark.operators.rank import (
-        global_rank_with_total,
-        release_rank_caches,
-    )
+    from cobradb_spark.operators.rank import global_rank_with_total
 
     li = load_table(spark, sf_dir, "lineitem").select(
         F.col("l_extendedprice").alias("x"), "l_orderkey", "l_linenumber"
@@ -589,7 +586,6 @@ def agg_quantile_exact_global(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("rn", "x")
         .collect()  # bounded: at most 2 * len(_QUANTILES) rows
     }
-    release_rank_caches()
     out = {}
     for q, (lo, f) in targets.items():
         xlo = got[lo]
@@ -760,27 +756,33 @@ FROM m
     "spend-sorted customers. Exactness: cents and ranks are exact "
     "integers, the weighted sum accumulates 128-bit, and the "
     "coefficient lands as one truncating division in ppm — no float "
-    "anywhere. The rank is the exact DISTRIBUTED global row_number "
-    "(operators/rank.py: range-partition + offsets; ties broken by "
-    "cust for a total order), never an Exchange SinglePartition. "
-    "Scale: one custkey partial-agg shuffle + one range-exchange for "
-    "the rank + a 1-row moment rollup.",
+    "anywhere. sum(rank*x) is linear in the rank, so rs = dot + "
+    "sum(cents) with dot = sum(cents * customers before) from "
+    "operators/rank.py prefix_dot over the total order (cents, cust): "
+    "an in-bucket window per cents >> 16 plus one offset window over "
+    "the bucket table, never an Exchange SinglePartition over "
+    "customers and no driver action while the frame is built. Scale: "
+    "one custkey partial-agg shuffle + one bucket shuffle + a 1-row "
+    "moment rollup.",
     tags=("aggregates",),
 )
 def agg_gini_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cobradb_spark.operators.rank import global_rank
+    from cobradb_spark.operators.rank import prefix_dot
 
     o = load_table(spark, sf_dir, "orders")
     pc = o.groupBy(F.col("o_custkey").alias("cust")).agg(
         F.sum((F.col("o_totalprice") * 100).cast("decimal(18,0)"))
         .cast("bigint")
-        .alias("cents")
+        .alias("cents"),
+        F.lit(1).cast("bigint").alias("one"),
     )
-    r = global_rank(pc, [F.col("cents"), F.col("cust")], rank_col="rk")
-    m = r.agg(
-        F.count("*").cast("bigint").alias("n"),
-        F.sum("cents").cast("bigint").alias("s"),
-        F.sum(F.col("rk").cast("decimal(19,0)") * F.col("cents")).alias("rs"),
+    # sum(rk * cents) with rk = 1 + customers before = dot + sum(cents)
+    m = prefix_dot(
+        pc, [], ["cents", "cust"], c="one", w="cents", sums=("one", "cents")
+    ).select(
+        F.col("one").alias("n"),
+        F.col("cents").alias("s"),
+        (F.col("dot") + F.col("cents")).alias("rs"),
     )
     return m.select(
         "n",

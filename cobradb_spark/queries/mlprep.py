@@ -1812,21 +1812,19 @@ FROM m
     "(sum(npos*(2*rank_before + n + 1)) - n_pos*(n_pos+1)) * 1e6 // "
     "(2*n_pos*n_neg) — truncating division, no float anywhere.  Scale "
     "posture: the score collapses to the (segment, cents) grid first "
-    "(one map-side-combinable shuffle over facts); the rank-before "
-    "prefix is the DISTRIBUTED exclusive prefix sum over the "
-    "composite (segment, cents) total order (operators/rank.py "
-    "global_prefix_sum + broadcast 5-row segment offsets — never a "
-    "per-segment window over the price grid), and the final AUC is a "
-    "5-row rollup.  At 100 TB only the grid rollup touches facts — "
-    "the agg_weighted_median_exact posture.",
+    "(one map-side-combinable shuffle over facts).  The rank sum is "
+    "linear in rank_before, so r2_pos = 2*dot + sum(npos*(n+1)) with "
+    "dot = sum(npos * rank_before) from operators/rank.py prefix_dot: "
+    "an in-bucket window per (segment, cents >> 16) plus a per-segment "
+    "offset window over the bucket table, one plan with no driver "
+    "action while the frame is built — never a per-segment window over "
+    "the price grid.  The final AUC is a 5-row rollup.  At 100 TB only "
+    "the grid rollup touches facts — the agg_weighted_median_exact "
+    "posture.",
     tags=("mlprep",),
 )
 def mlprep_roc_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cobradb_spark.operators.rank import (
-        global_prefix_sum,
-        lit_map,
-        per_group_offsets,
-    )
+    from cobradb_spark.operators.rank import prefix_dot
 
     o = load_table(spark, sf_dir, "orders")
     s = o.select(
@@ -1840,33 +1838,21 @@ def mlprep_roc_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").cast("bigint").alias("n"),
         F.sum("y").cast("bigint").alias("npos"),
     )
-    # DISTRIBUTED exclusive prefix over the composite (prio, cents)
-    # total order + broadcast per-segment offsets (|segments| = 5-row
-    # bounded collect) — not a per-segment running window, whose
-    # parallelism would be |segments| tasks over a grid that grows with
-    # price cardinality (the win_rolling_ols lesson; the
-    # agg_weighted_median_exact pattern).
-    ps, tagged = global_prefix_sum(
-        g, [F.col("prio"), F.col("cents")], "n", out_col="_ps", with_frame=True
+    # widen BEFORE the product (oracle does CAST(npos AS HUGEINT)):
+    # npos * (n+1) can cross 2^63 on a dense tie cell at the 100 TB
+    # posture — 64-bit-then-cast would overflow first
+    g = g.withColumn(
+        "npos_n1", F.col("npos").cast("decimal(38,0)") * (F.col("n") + 1)
     )
-    # group totals come from the PERSISTED range-partitioned frame, not
-    # a second aggregation of g's unpersisted lineage (r8 ADVICE: the
-    # re-derivation was a second full scan of the fact table)
-    off, _tot = per_group_offsets(tagged, "prio", ["n"])
-    r = ps.withColumn(
-        "rank_before",
-        (F.col("_ps") - lit_map(off["n"])[F.col("prio")]).cast("bigint"),
-    )
-    m = r.groupBy("prio").agg(
-        F.sum("n").cast("bigint").alias("n_rows"),
-        F.sum("npos").cast("bigint").alias("n_pos"),
-        # widen BEFORE the product (oracle does CAST(npos AS HUGEINT)):
-        # npos * 2*rank_before can cross 2^63 on a dense tie cell at
-        # the 100 TB posture — 64-bit-then-cast would overflow first
-        F.sum(
-            F.col("npos").cast("decimal(19,0)")
-            * (2 * F.col("rank_before") + F.col("n") + 1)
-        ).alias("r2_pos"),
+    # sum(npos * (2*rank_before + n + 1)) = 2*dot + sum(npos*(n+1)),
+    # rank_before = the segment's exclusive prefix of n in cents order
+    m = prefix_dot(
+        g, ["prio"], ["cents"], c="n", w="npos", sums=("n", "npos", "npos_n1")
+    ).select(
+        "prio",
+        F.col("n").cast("bigint").alias("n_rows"),
+        F.col("npos").cast("bigint").alias("n_pos"),
+        (2 * F.col("dot") + F.col("npos_n1")).alias("r2_pos"),
     )
     return m.select(
         "prio",

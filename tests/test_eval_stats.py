@@ -8,6 +8,7 @@ from __future__ import annotations
 import hashlib
 import math
 from collections import Counter, defaultdict
+from decimal import ROUND_HALF_UP, Decimal
 
 from cobradb_spark import registry
 
@@ -47,6 +48,31 @@ def test_roc_auc_matches_naive_pairwise(spark, sf_dir):
         got = out[prio]
         assert got.n_pos == len(pos) and got.n_neg == len(neg)
         assert got.auc_ppm == want, prio
+
+
+def test_gini_matches_naive_sorted_replay(spark, sf_dir):
+    """Gini from prefix_dot must equal the rank formulation
+    (2*sum(i*x_i) - (n+1)*sum(x)) / (n*sum(x)) over customers sorted in
+    Python by (spend, custkey), as a truncating ppm."""
+    spend = defaultdict(int)
+    for r in (
+        spark.read.parquet(f"{sf_dir}/orders.parquet")
+        .select("o_custkey", "o_totalprice")
+        .collect()
+    ):
+        # CAST(o_totalprice * 100 AS DECIMAL(18,0)) rounds half up
+        cents = Decimal(repr(r.o_totalprice * 100)).quantize(
+            Decimal(1), rounding=ROUND_HALF_UP
+        )
+        spend[r.o_custkey] += int(cents)
+    xs = [x for x, _ in sorted((x, c) for c, x in spend.items())]
+    n, s = len(xs), sum(xs)
+    rs = sum((i + 1) * x for i, x in enumerate(xs))
+    num = 2 * rs * 1_000_000 - (n + 1) * s * 1_000_000
+    assert num >= 0  # ascending order: floor division == truncation
+    (got,) = registry.get_query("agg_gini_spend").fn(spark, sf_dir).collect()
+    assert (got.n, got.total_cents) == (n, s)
+    assert got.gini_ppm == num // (n * s)
 
 
 def test_ks_matches_naive_cdf_scan(spark, sf_dir):

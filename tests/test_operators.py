@@ -130,6 +130,91 @@ def test_global_prefix_sum_exclusive(spark):
         acc += (i * 3) % 7 + 1
 
 
+def test_prefix_dot_matches_bruteforce(spark):
+    """prefix_dot == a pure-Python replay of sum_i w_i * (sum of c_j
+    before i), per group and globally, with keys straddling the 2^16
+    bucket edges (negative keys included), first-key ties broken by the
+    second key, a one-row group, and the same answer at 1 and 7 shuffle
+    partitions."""
+    from cobradb_spark.operators.rank import prefix_dot
+
+    keys = {
+        "a": [0, 5, 65535, 65535, 65536, 65536, 131071, 131072, 131072, 200000],
+        "b": [-70000, -1, 0, 65535, 65536, 65536, 131071, 300001, 300001],
+        "c": [131071],
+    }
+    rows, i = [], 0
+    for g, ks in keys.items():
+        for k in ks:
+            # tie key descends within a group so first-key ties replay
+            # against the second order column, not insertion order
+            rows.append((g, k, 1000 - i, (i * 7) % 5 + 1, (i * 3) % 4 - 1))
+            i += 1
+    df = spark.createDataFrame(rows, "g string, k long, t long, c long, w long")
+
+    def replay(rs):
+        acc = dot = 0
+        for r in sorted(rs, key=lambda r: (r[1], r[2])):
+            dot += r[4] * acc
+            acc += r[3]
+        return dot, sum(r[3] for r in rs), sum(r[4] for r in rs)
+
+    want = {g: replay([r for r in rows if r[0] == g]) for g in keys}
+    want_all = replay(rows)
+    default = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        for parts in ("1", "7"):
+            spark.conf.set("spark.sql.shuffle.partitions", parts)
+            got = {
+                r.g: (int(r.dot), r.c, r.w)
+                for r in prefix_dot(
+                    df, ["g"], ["k", "t"], c="c", w="w", sums=("c", "w")
+                ).collect()
+            }
+            assert got == want, parts
+            (r,) = prefix_dot(
+                df, [], ["k", "t"], c="c", w="w", sums=("c", "w")
+            ).collect()
+            assert (int(r.dot), r.c, r.w) == want_all, parts
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", default)
+
+
+def test_rank_sum_keys_build_without_jobs_or_pins(spark, sf_dir):
+    """The prefix_dot keys fold their rank sums into the plan: building
+    the frame runs no Spark job and pins nothing.  The range-partitioned
+    rank of agg_quantile_exact_global is the control that the job
+    group does see build-time jobs."""
+    from cobradb_spark import registry
+    from cobradb_spark.io import load_table
+    from cobradb_spark.operators import rank
+
+    # the first load of a table infers its parquet schema with a job;
+    # the session-wide schema cache serves every later build
+    for table in ("orders", "lineitem"):
+        load_table(spark, sf_dir, table)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def build_jobs(key):
+        group = f"build-{key}"
+        sc.setJobGroup(group, group)
+        try:
+            registry.get_query(key).fn(spark, sf_dir)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(tracker.getJobIdsForGroup(group))
+
+    try:
+        pins = [id(df) for df in rank._PINNED]
+        for key in ("mlprep_roc_auc", "agg_gini_spend"):
+            assert build_jobs(key) == 0, key
+            assert [id(df) for df in rank._PINNED] == pins, key
+        assert build_jobs("agg_quantile_exact_global") > 0
+    finally:
+        rank.release_rank_caches()
+
+
 def test_global_pct_rank_formulas(spark):
     from pyspark.sql import Window
     from pyspark.sql import functions as F
@@ -225,6 +310,21 @@ def test_pin_cache_lifecycle(spark):
     assert released >= 1
     assert not pinned.storageLevel.useMemory
     assert rank.release_rank_caches() == 0  # registry drained
+
+
+def test_query_build_keeps_other_queries_pins(spark, sf_dir):
+    """Building a query must not drain pins another built-but-unexecuted
+    query still relies on; the harnesses release after each key."""
+    from cobradb_spark import registry
+    from cobradb_spark.operators import rank
+
+    try:
+        pinned = rank.pin_cache(spark.range(50))
+        assert pinned.count() == 50
+        registry.get_query("agg_quantile_exact_global").fn(spark, sf_dir)
+        assert pinned.storageLevel.useMemory
+    finally:
+        rank.release_rank_caches()
 
 
 def test_schema_diff_classifier_general_cases():

@@ -249,6 +249,7 @@ def test_global_quantiles_match_numpy(spark, sf_dir):
     import numpy as np
 
     from cobradb_spark.io import load_table
+    from cobradb_spark.operators.rank import release_rank_caches
     from cobradb_spark.registry import get_query
 
     xs = np.sort(
@@ -262,6 +263,7 @@ def test_global_quantiles_match_numpy(spark, sf_dir):
         )
     )
     row = get_query("agg_quantile_exact_global").fn(spark, sf_dir).first()
+    release_rank_caches()  # the build pinned its range-partitioned frame
     assert row["n_rows"] == len(xs)
     for q, col in ((0.5, "p5"), (0.9, "p9"), (0.99, "p99"), (0.999, "p999")):
         expect = np.percentile(xs, q * 100, method="linear")

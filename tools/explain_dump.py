@@ -18,6 +18,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from cobradb_spark import registry
+from cobradb_spark.operators.rank import release_rank_caches
 from cobradb_spark.plans import formatted_plan
 from cobradb_spark.session import get_spark
 
@@ -32,6 +33,7 @@ def main() -> int:
     qs = registry.all_queries()
     for key in keys:
         plan = formatted_plan(qs[key].fn(spark, SF))
+        release_rank_caches()  # the next key plans without this key's pins
         path = os.path.join(out_dir, f"{key}_{suffix}.txt")
         with open(path, "w") as f:
             f.write(f"# {key} — explain('formatted') at {SF}\n\n")

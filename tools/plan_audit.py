@@ -32,6 +32,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 from cobradb_spark import registry
+from cobradb_spark.operators.rank import release_rank_caches
 from cobradb_spark.plans import canonical_plan_hash, formatted_plan
 from cobradb_spark.session import get_spark
 
@@ -1446,12 +1447,23 @@ AUDITS = [
     ),
     (
         "mlprep_roc_auc",
-        ["partial_sum", "rangepartitioning"],
+        ["partial_sum", "Window"],
         ["CartesianProduct", "SortMergeJoin", "BatchEvalPython",
          "SinglePartition"],
         "facts collapse once to the (segment, cents) grid (map-side "
-        "combine); rank-before is the DISTRIBUTED range-partitioned "
-        "prefix sum — no per-segment window, no single partition",
+        "combine); the rank sum is rank.prefix_dot — windows partitioned "
+        "by (segment, cents >> 16) and by segment over the bucket table, "
+        "no range sampling, no single partition",
+    ),
+    (
+        "agg_gini_spend",
+        ["partial_sum", "Window"],
+        ["CartesianProduct", "SortMergeJoin", "BatchEvalPython"],
+        "customers collapse once by custkey; sum(rank * cents) is "
+        "rank.prefix_dot over (cents, cust) — the in-bucket window is "
+        "partitioned by cents >> 16, and the one single-partition window "
+        "runs over the bucket table, at most (spend range >> 16) rows "
+        "whatever the row count",
     ),
     (
         "mlprep_ks_statistic",
@@ -1911,6 +1923,9 @@ _UNPARTITIONED_WINDOW_OK: dict[str, str] = {
     "events_slo_burn_rate": "6h rolling frame over the hourly error-rate grid",
     "mlprep_lorenz_deciles": "running sum over the 10-row decile rollup",
     "analytics_diff_in_diff": "scalar attach over the 2-row arm rollup",
+    # rank.prefix_dot with no group: the offset window runs over the
+    # bucket table, one row per 2^16 cents of spend range
+    "agg_gini_spend": "offset window over the (spend >> 16) bucket table",
 }
 
 
@@ -2201,6 +2216,10 @@ def main() -> int:
             hashes[name] = None
             failures[name] = [f"{name}: plan build failed: {type(e).__name__}: {e}"]
             continue
+        finally:
+            # plan every key in isolation: a frame an earlier key pinned
+            # would otherwise substitute into this plan as a cache scan
+            release_rank_caches()
         hashes[name] = canonical_plan_hash(plan)
         msgs = [
             m
