@@ -6,21 +6,24 @@ partition (Catalyst plans a single-partition window) — the classic
 two shapes chosen by what the consumer does with the rank.
 
 Per-row consumers (a quantile pick, a running maximum, ntile, a
-winsorized cut) need the rank or prefix ON each row.  global_rank,
-global_prefix_sum(s) and friends compute it with a range partition:
+winsorized cut) need the rank or prefix ON each row.  global_rank and
+prefix_sums compute it, grouped or not, from one range partition:
 
-1. `repartitionByRange` on the order keys — partition i holds a
-   contiguous, disjoint key range, ranges ascending with partition id;
-2. per-partition counts -> driver (K tiny rows), prefix-summed into
-   per-partition global offsets;
+1. `repartitionByRange` on the (group, order) keys — partition i holds
+   a contiguous, disjoint key range, ranges ascending with partition
+   id;
+2. ONE driver collect of per-partition (per-(partition, group) for
+   prefix_sums) counts or sums — at most K + |groups| tiny rows —
+   prefix-summed into per-partition offsets and group totals;
 3. a window PARTITIONED by the range-partition id (so it shuffles by
-   pid, never collapses to one task) computes local row_number, and
-   `offset[pid] + local` is the exact global rank.
+   pid, never collapses to one task) computes the local row_number or
+   running sum, and `offset + local` is the exact rank or prefix.
 
 Ties must be fully broken by the order keys (callers append a unique
 key), which makes the result independent of where the sampled range
 boundaries happen to fall.  The sampled frame is persisted and pinned
-(see the RELEASE CONTRACT below) and the offsets cost driver collects.
+(see the RELEASE CONTRACT below), and sampling plus the collect cost
+driver jobs while the frame is built.
 
 Linear consumers (a Mann-Whitney rank sum, Gini's sum of rank * x) only
 SUM the rank against a weight.  prefix_dot serves them inside one plan:
@@ -34,8 +37,10 @@ from __future__ import annotations
 
 import threading
 
+import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, LongType, MapType, StructType
 
 # Persisted range-partitioned frames, pinned until the caller's result is
 # materialized.  The persist is load-bearing for correctness (the offset
@@ -72,10 +77,6 @@ def pin(df: DataFrame) -> DataFrame:
     return df
 
 
-# internal alias kept for the module's own helpers
-_pin = pin
-
-
 def pin_cache(df: DataFrame) -> DataFrame:
     """persist() a frame that multiple downstream subtrees re-evaluate,
     registered for release_rank_caches() — the query-local caching idiom
@@ -100,20 +101,26 @@ def release_rank_caches() -> int:
     return n
 
 
+def _range_tagged(df: DataFrame, order_cols: list, num_parts: int | None) -> DataFrame:
+    """`df` range-partitioned by `order_cols` into `num_parts` (default:
+    the core count) partitions, each row tagged with its partition id
+    `_pid`, persisted and pinned."""
+    k = num_parts or max(df.sparkSession.sparkContext.defaultParallelism, 2)
+    return pin(
+        df.repartitionByRange(k, *order_cols)
+        .withColumn("_pid", F.spark_partition_id())
+        .persist()
+    )
+
+
 def global_rank_with_total(
     df: DataFrame, order_cols: list[Column], rank_col: str, num_parts: int | None = None
 ) -> tuple[DataFrame, int]:
     """Shared core: (frame with exact global row_number, total row count).
 
     The total is free — it is the final prefix-sum accumulator — so
-    callers that need n (ntile, percent_rank, cume_dist) pay no extra
-    action."""
-    k = num_parts or max(df.sparkSession.sparkContext.defaultParallelism, 2)
-    tagged = _pin(
-        df.repartitionByRange(k, *order_cols)
-        .withColumn("_pid", F.spark_partition_id())
-        .persist()
-    )
+    callers that need n (ntile) pay no extra action."""
+    tagged = _range_tagged(df, order_cols, num_parts)
     counts = {r._pid: r["count"] for r in tagged.groupBy("_pid").count().collect()}
     offsets, acc = {}, 0
     for pid in sorted(counts):
@@ -177,165 +184,82 @@ def ntile_expr(rn: Column, n: int, k: int) -> Column:
     )
 
 
-def global_pct_rank(
+def prefix_sums(
     df: DataFrame,
-    order_cols: list[Column],
-    pr_col: str = "pr",
-    cd_col: str = "cd",
-    rank_col: str | None = None,
+    group_cols: list[str],
+    order_cols: list,
+    values: list[str],
     num_parts: int | None = None,
 ) -> DataFrame:
-    """Exact percent_rank and cume_dist by a TOTAL order (unique
-    tiebreaker ⇒ rank == row_number, so pr = (rn-1)/(n-1) and
-    cd = rn/n), from the distributed global rank — no single-partition
-    window."""
-    rc = rank_col or "_pct_rn"
-    drop_rank = rank_col is None
-    while drop_rank and rc in df.columns:
-        rc += "_"
-    ranked, n = global_rank_with_total(df, order_cols, rc, num_parts)
-    rn = F.col(rc)
-    pr = (rn - 1) / (n - 1) if n > 1 else F.lit(0.0)
-    out = ranked.withColumn(pr_col, pr.cast("double")).withColumn(
-        cd_col, (rn / n).cast("double")
-    )
-    return out.drop(rc) if drop_rank else out
+    """Add `<v>_before` and `<v>_total` for each integral column v in
+    `values`: the EXCLUSIVE prefix sum of v within the row's group in
+    the order `order_cols`, and the sum of v over the group.
+    `group_cols=[]` makes the whole frame one group.
 
-
-def global_prefix_sums(
-    df: DataFrame,
-    order_cols: list[Column],
-    value_cols: dict[str, str],
-    num_parts: int | None = None,
-    with_frame_and_totals: bool = False,
-):
-    """Multi-column global_prefix_sum: add one EXCLUSIVE prefix-sum
-    column per (value_col -> out_col) entry in ONE range-partition
-    shuffle and ONE driver collect (r8 review: the KS/AP grid queries
-    were paying two repartitionByRange passes for two prefix columns).
-
-    Same scale contract as global_prefix_sum; `order_cols` must define a
-    TOTAL order.
-
-    with_frame_and_totals=True returns (out, tagged, totals) where
-    `tagged` is the PERSISTED range-partitioned frame (feed it to
-    per_group_offsets so group totals come from the cache, not a second
-    scan of the caller's unpersisted lineage — r8 ADVICE) and `totals`
-    maps value_col -> grand total (the final prefix accumulator, free —
-    callers needing the overall sum pay no extra action)."""
-    k = num_parts or max(df.sparkSession.sparkContext.defaultParallelism, 2)
-    tagged = _pin(
-        df.repartitionByRange(k, *order_cols)
-        .withColumn("_pid", F.spark_partition_id())
-        .persist()
-    )
-    aggs = [F.sum(v).alias(v) for v in value_cols]
-    per_pid = {r._pid: r for r in tagged.groupBy("_pid").agg(*aggs).collect()}
-    w = (
-        Window.partitionBy("_pid")
-        .orderBy(*order_cols)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    out = tagged
-    totals: dict[str, int] = {}
-    for v, out_col in value_cols.items():
-        offsets, acc = {}, 0
-        for pid in sorted(per_pid):
-            offsets[pid] = acc
-            acc += per_pid[pid][v] or 0
-        totals[v] = acc
-        off_map = F.create_map(
-            *[F.lit(x) for pid_off in offsets.items() for x in pid_off]
-        )
-        local = F.coalesce(F.sum(v).over(w), F.lit(0))
-        out = out.withColumn(out_col, (off_map[F.col("_pid")] + local).cast("long"))
-    out = out.drop("_pid")
-    if with_frame_and_totals:
-        return out, tagged, totals
-    return out
-
-
-def per_group_offsets(
-    g: DataFrame, group_col: str, value_cols: list[str]
-) -> tuple[dict[str, dict], dict[str, dict]]:
-    """Shared scaffolding for composite-order prefix sums consumed
-    per group (r8 review: five near-identical copies): collect per-group
-    totals for each value column (|groups| tiny rows), derive the
-    EXCLUSIVE offsets in group sort order, and return
-    (offsets[value_col][group], totals[value_col][group]).  Callers wrap
-    them in F.create_map literals."""
-    rows = g.groupBy(group_col).agg(
-        *[F.sum(v).alias(v) for v in value_cols]
-    ).collect()
-    by_group = {r[group_col]: r for r in rows}
-    offsets: dict[str, dict] = {v: {} for v in value_cols}
-    totals: dict[str, dict] = {v: {} for v in value_cols}
-    for v in value_cols:
-        acc = 0
-        for gk in sorted(by_group):
-            offsets[v][gk] = acc
-            tot = by_group[gk][v] or 0
-            totals[v][gk] = tot
-            acc += tot
-    return offsets, totals
-
-
-def lit_map(d: dict) -> Column:
-    """F.create_map literal from a small python dict (broadcast lookup)."""
-    return F.create_map(*[F.lit(x) for kv in d.items() for x in kv])
-
-
-def global_prefix_sum(
-    df: DataFrame,
-    order_cols: list[Column],
-    value_col: str,
-    out_col: str = "prefix_sum",
-    num_parts: int | None = None,
-    with_frame: bool = False,
-):
-    """Add `out_col` = EXCLUSIVE prefix sum of `value_col` in the total
-    order defined by `order_cols`, distributed.
-
-    Same scale-safe shape as global_rank: a plain running SUM() OVER
-    (ORDER BY ...) is a single-partition window; here partition i's rows
-    get `global_offset[i] + local running sum`, where the offsets are the
-    prefix-summed per-partition totals (K tiny rows to the driver).
-    `order_cols` must define a TOTAL order (append a unique tiebreaker).
-
-    with_frame=True returns (out, tagged): `tagged` is the PERSISTED
-    range-partitioned frame — feed it to per_group_offsets so group
-    totals aggregate the cache, not a second pass over the caller's
-    unpersisted lineage (r8 ADVICE).
-    """
-    k = num_parts or max(df.sparkSession.sparkContext.defaultParallelism, 2)
-    tagged = _pin(
-        df.repartitionByRange(k, *order_cols)
-        .withColumn("_pid", F.spark_partition_id())
-        .persist()
-    )
+    The frame is range-partitioned by the composite (group_cols,
+    order_cols) order.  ONE driver collect of sum(v) per (partition,
+    group) — at most K + |groups| rows, read from the pinned frame —
+    gives each partition the sum of v over the partitions before it,
+    and each group the sum over the groups before it and its total.  A
+    window PARTITION BY _pid in the composite order adds the partition's
+    running sum, so the composite prefix minus the group's start is the
+    prefix within the group.  `order_cols` (names or sort Columns) must
+    define a TOTAL order within each group: append a unique tiebreaker.
+    Group keys must order in Python as Spark orders them ascending
+    (strings, integers, nulls first).  `num_parts` sets the partition
+    count K."""
+    tagged = _range_tagged(df, [*group_cols, *order_cols], num_parts)
+    n = len(values)
+    per_pid = tagged.groupBy("_pid", *group_cols).agg(*[F.sum(v).alias(v) for v in values])
     sums = {
-        r._pid: r["s"] or 0
-        for r in tagged.groupBy("_pid").agg(F.sum(value_col).alias("s")).collect()
+        (r["_pid"], tuple(r[c] for c in group_cols)): [r[v] or 0 for v in values]
+        for r in per_pid.collect()
     }
-    offsets, acc = {}, 0
-    for pid in sorted(sums):
-        offsets[pid] = acc
-        acc += sums[pid]
-    off_map = F.create_map(
-        *[F.lit(x) for pid_off in offsets.items() for x in pid_off]
-    )
-    w = (
+
+    def before_and_total(part: int, order=None):
+        """Per partition (part=0) or group (part=1): the summed values of
+        the partitions or groups before it in `order`, and its own."""
+        total: dict = {}
+        for k, s in sums.items():
+            total[k[part]] = [a + b for a, b in zip(total.get(k[part], [0] * n), s)]
+        before, acc = {}, [0] * n
+        for k in sorted(total, key=order):
+            before[k], acc = acc, [a + b for a, b in zip(acc, total[k])]
+        return before, total
+
+    pid_before, _ = before_and_total(0)
+    grp_before, grp_total = before_and_total(1, lambda g: [(x is not None, x) for x in g])
+    # (partition, group) -> [partition offset - group start..., group totals...]
+    entries = {
+        (pid, *g): [a - b for a, b in zip(pid_before[pid], grp_before[g])] + grp_total[g]
+        for pid, g in sums
+    }
+    key_type = StructType([per_pid.schema[c] for c in ("_pid", *group_cols)])
+    # a numpy array is one py4j call where F.array(*lits) is one per item
+    lookup = F.create_map(
+        *[
+            x
+            for k, e in entries.items()
+            for x in (F.struct(*map(F.lit, k)), F.lit(np.array(e, dtype=np.int64)))
+        ]
+    ).cast(MapType(key_type, ArrayType(LongType())))[F.struct("_pid", *group_cols)]
+    local = (
         Window.partitionBy("_pid")
-        .orderBy(*order_cols)
+        .orderBy(*group_cols, *order_cols)
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    local = F.coalesce(F.sum(value_col).over(w), F.lit(0))
-    out = tagged.withColumn(
-        out_col, (off_map[F.col("_pid")] + local).cast("long")
-    ).drop("_pid")
-    if with_frame:
-        return out, tagged
-    return out
+    # totals in a second projection: in the window's projection they
+    # would be evaluated below it and widen its shuffle
+    return (
+        tagged.withColumns(
+            {
+                f"{v}_before": lookup[i] + F.coalesce(F.sum(v).over(local), F.lit(0))
+                for i, v in enumerate(values)
+            }
+        )
+        .withColumns({f"{v}_total": lookup[n + i] for i, v in enumerate(values)})
+        .drop("_pid")
+    )
 
 
 # prefix_dot buckets rows by `order_cols[0] >> _BUCKET_SHIFT`.  The

@@ -56,15 +56,12 @@ def formatted_plan(df: DataFrame) -> str:
 
 # Run-varying tokens of a formatted plan, each with its stand-in:
 # expression, plan and RDD ids, paths, statistics, names drawn from
-# JVM-wide counters (common subexpressions, lambda variables), ML random
-# UIDs, and literal maps, which queries build from data collected while
-# they are built (e.g. operators/rank.py's per-partition offsets, whose
-# range boundaries come from a sample seeded by an RDD id).
+# JVM-wide counters (common subexpressions, lambda variables) and ML
+# random UIDs.  Literal maps are scrubbed separately (_scrub_calls).
 _PLAN_SCRUBS = (
     (re.compile(r"#\d+"), "#x"),
     (re.compile(r"plan_id=\d+"), "plan_id=x"),
     (re.compile(r"RDD\[\d+\]"), "RDD[x]"),
-    (re.compile(r"map\(keys: \[[^\]]*\], values: \[[^\]]*\]\)"), "map(x)"),
     (re.compile(r"Location: \S+ \[[^\]]*\]"), "Location: x"),
     (re.compile(r"file:/[^\s,\]]+"), "file:x"),
     (re.compile(r"Statistics\([^)]*\)"), "Statistics(x)"),
@@ -76,19 +73,22 @@ _PLAN_SCRUBS = (
 )
 _PARTITIONING = re.compile(r"(?:hashpartitioning|rangepartitioning|RoundRobinPartitioning)\(")
 _TRAILING_COUNT = re.compile(r"\d+$")
+# A literal map, which queries build from data collected while they are
+# built (e.g. operators/rank.py's per-partition offsets, whose range
+# boundaries come from a sample seeded by an RDD id).  Its keys and
+# values may nest, e.g. map(keys: [[0,A],[1,N]], values: [[0,5],[2,5]]).
+_LITERAL_MAP = re.compile(r"\bmap\((?=keys: \[)")
 # A node's detail line, e.g. "Output [2]: [a#1, b#2]" or "Arguments: ...".
 _DETAIL = re.compile(r"^([A-Z][\w ]*(?: \[\d+\])?): (.*)$", re.MULTILINE)
 _TOKEN = re.compile(r"[\w#.$]+|\S")
 
 
-def _scrub_partition_counts(plan: str) -> str:
-    """Replace the partition count, the last argument of every
-    hash/range/round-robin partitioning, with `n`.  The count is
-    spark.sql.shuffle.partitions, which the session sizes to the core
-    count, so the same plan must not hash differently per machine."""
+def _scrub_calls(plan: str, opener: re.Pattern, rewrite) -> str:
+    """Replace the arguments of every `opener(...)` call in `plan`,
+    matched to its balanced closing parenthesis, with rewrite(args)."""
     out: list[str] = []
     i = 0
-    for m in _PARTITIONING.finditer(plan):
+    for m in opener.finditer(plan):
         if m.start() < i:
             continue
         depth, k = 1, m.end()
@@ -97,8 +97,7 @@ def _scrub_partition_counts(plan: str) -> str:
             k += 1
         if depth:  # unbalanced (truncated) tail: leave it as it is
             break
-        args = _TRAILING_COUNT.sub("n", plan[m.end() : k - 1])
-        out.append(plan[i : m.end()] + args + ")")
+        out.append(plan[i : m.end()] + rewrite(plan[m.end() : k - 1]) + ")")
         i = k
     out.append(plan[i:])
     return "".join(out)
@@ -119,7 +118,12 @@ def canonical_plan_hash(plan: str) -> str:
     more count-distincts differ from one JVM to the next."""
     for pattern, repl in _PLAN_SCRUBS:
         plan = pattern.sub(repl, plan)
-    plan = _DETAIL.sub(_sorted_detail, _scrub_partition_counts(plan))
+    plan = _scrub_calls(plan, _LITERAL_MAP, lambda args: "x")
+    # the partition count, the last argument of every partitioning, is
+    # spark.sql.shuffle.partitions, which the session sizes to the core
+    # count, so the same plan must not hash differently per machine
+    plan = _scrub_calls(plan, _PARTITIONING, lambda args: _TRAILING_COUNT.sub("n", args))
+    plan = _DETAIL.sub(_sorted_detail, plan)
     return hashlib.md5(plan.encode()).hexdigest()
 
 

@@ -879,16 +879,16 @@ FROM c GROUP BY flag, tot
     "integer-exact: BIGINT weight sums, the crossing test as "
     "2*cum >= tot. Scale posture: values "
     "first collapse to the (flag, cents) weight grid (one partial-agg "
-    "shuffle); the cumulative weight then comes from the DISTRIBUTED "
-    "exclusive prefix sum over the (flag, cents) total order "
-    "(operators/rank.py global_prefix_sum: range-partition + offset "
-    "map) plus broadcast per-flag totals — NOT a per-flag running "
-    "window, whose parallelism would be |flags| = 3 tasks over a grid "
-    "that grows with data (the win_rolling_ols lesson).",
+    "shuffle); the per-flag cumulative weight and total then come from "
+    "operators/rank.py prefix_sums (one range partition over the "
+    "(flag, cents) order, one driver collect of per-(partition, flag) "
+    "sums) — NOT a per-flag running window, whose parallelism would be "
+    "|flags| = 3 tasks over a grid that grows with data (the "
+    "win_rolling_ols lesson).",
     tags=("aggregates",),
 )
 def agg_weighted_median_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cobradb_spark.operators.rank import global_prefix_sum
+    from cobradb_spark.operators.rank import prefix_sums
 
     li = load_table(spark, sf_dir, "lineitem")
     g = li.groupBy(
@@ -901,25 +901,11 @@ def agg_weighted_median_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("cents"),
     ).agg(F.sum(F.col("l_quantity").cast("bigint")).cast("bigint").alias("w"))
-    # exclusive prefix sum over the composite (flag, cents) order;
-    # per-flag inclusive cum = excl_prefix - flag_offset + w
-    ps = global_prefix_sum(g, [F.col("flag"), F.col("cents")], "w", out_col="_ps")
-    # flag offsets and totals: |flags| rows (bounded collect, 3 rows)
-    totals = {
-        r.flag: (r.tot,) for r in g.groupBy("flag").agg(F.sum("w").alias("tot")).collect()
-    }
-    flags = sorted(totals)
-    offsets, acc = {}, 0
-    for fl in flags:
-        offsets[fl] = acc
-        acc += totals[fl][0]
-    off_map = F.create_map(*[F.lit(x) for fo in offsets.items() for x in fo])
-    tot_map = F.create_map(*[F.lit(x) for ft in ((f, totals[f][0]) for f in flags) for x in ft])
-    c = ps.select(
+    c = prefix_sums(g, ["flag"], ["cents"], ["w"]).select(
         "flag",
         "cents",
-        (F.col("_ps") - off_map[F.col("flag")] + F.col("w")).alias("cum"),
-        tot_map[F.col("flag")].alias("tot"),
+        (F.col("w_before") + F.col("w")).alias("cum"),
+        F.col("w_total").alias("tot"),
     )
     return c.groupBy("flag", F.col("tot").cast("bigint").alias("total_qty")).agg(
         F.min(F.when(2 * F.col("cum") >= F.col("tot"), F.col("cents")))
@@ -979,17 +965,13 @@ FROM pieces
     "first cell crossing each trim rank.  All arithmetic is 128-bit "
     "integer with declared milli-cent truncating division.  Scale "
     "posture: facts collapse once to the value grid (map-side "
-    "combine); the cumulative frame runs over the DISTRIBUTED prefix "
-    "sum (operators/rank.py + broadcast 3-row flag offsets, the "
-    "agg_weighted_median_exact pattern); output is 3 rows.",
+    "combine); the per-flag cumulative frame and totals come from "
+    "operators/rank.py prefix_sums (the agg_weighted_median_exact "
+    "pattern); output is 3 rows.",
     tags=("aggregates",),
 )
 def agg_winsorized_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cobradb_spark.operators.rank import (
-        global_prefix_sum,
-        lit_map,
-        per_group_offsets,
-    )
+    from cobradb_spark.operators.rank import prefix_sums
 
     li = load_table(spark, sf_dir, "lineitem")
     g = li.groupBy(
@@ -998,19 +980,12 @@ def agg_winsorized_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("cents"),
     ).agg(F.count("*").cast("bigint").alias("n"))
-    ps, tagged = global_prefix_sum(
-        g, [F.col("flag"), F.col("cents")], "n", out_col="_ps", with_frame=True
-    )
-    # group totals come from the PERSISTED range-partitioned frame, not
-    # a second aggregation of g's unpersisted lineage (r8 ADVICE)
-    off, tot = per_group_offsets(tagged, "flag", ["n"])
-    off_m, tot_m = lit_map(off["n"]), lit_map(tot["n"])
-    k = ps.select(
+    k = prefix_sums(g, ["flag"], ["cents"], ["n"]).select(
         "flag",
         "cents",
         "n",
-        (F.col("_ps") - off_m[F.col("flag")]).cast("bigint").alias("cum_lo"),
-        tot_m[F.col("flag")].cast("bigint").alias("n_tot"),
+        F.col("n_before").alias("cum_lo"),
+        F.col("n_total").alias("n_tot"),
     ).withColumn("k_lo", F.expr("n_tot * 5 div 100")).withColumn(
         "k_hi", F.expr("n_tot - n_tot * 5 div 100")
     )

@@ -3209,19 +3209,15 @@ GROUP BY r.event_type, p.peak
     "integer, and the peak's first time / multiplicity come from one "
     "equi-join against the 3-row peak table.  Scale posture: the "
     "boundary multiset is 2x events but collapses through the "
-    "DISTRIBUTED composite-order prefix sum (operators/rank.py "
-    "global_prefix_sums + broadcast per-type offsets) — never a "
-    "per-type single-partition window over fact-scale boundaries; "
+    "per-type prefix sum of operators/rank.py prefix_sums (one range "
+    "partition over the (type, us, delta) order) — never a per-type "
+    "single-partition window over fact-scale boundaries; "
     "the peak rollup and join-back are |types|-row work.",
     tags=("analytics", "timeseries"),
 )
 def events_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cobradb_spark.io import load_events
-    from cobradb_spark.operators.rank import (
-        global_prefix_sums,
-        lit_map,
-        per_group_offsets,
-    )
+    from cobradb_spark.operators.rank import prefix_sums
 
     ev = load_events(spark, sf_dir).filter(
         F.col("event_type").isin("view", "click", "purchase")
@@ -3236,24 +3232,13 @@ def events_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type", F.col("hi").alias("us"), F.lit(-1).cast("bigint").alias("delta")
         )
     )
-    # composite (type, us, delta) total order: delta ASC puts the -1
-    # boundary first at a tie (closed-open intervals) — the INCLUSIVE
-    # running sum is the exclusive distributed prefix + the row's delta
-    ps, tagged, _tots = global_prefix_sums(
-        bounds,
-        [F.col("event_type"), F.col("us"), F.col("delta")],
-        {"delta": "_psd"},
-        with_frame_and_totals=True,
-    )
-    # per-type offsets aggregate the persisted frame (r8 ADVICE: not a
-    # second scan of the fact-scale boundary union)
-    off, _tot = per_group_offsets(tagged, "event_type", ["delta"])
-    run = ps.select(
+    # per-type (us, delta) total order: delta ASC puts the -1 boundary
+    # first at a tie (closed-open intervals) — the INCLUSIVE running
+    # sum is the exclusive prefix + the row's delta
+    run = prefix_sums(bounds, ["event_type"], ["us", "delta"], ["delta"]).select(
         "event_type",
         "us",
-        (F.col("_psd") - lit_map(off["delta"])[F.col("event_type")] + F.col("delta"))
-        .cast("bigint")
-        .alias("conc"),
+        (F.col("delta_before") + F.col("delta")).alias("conc"),
     )
     pk = run.groupBy("event_type").agg(F.max("conc").cast("bigint").alias("peak"))
     return (
@@ -3678,15 +3663,15 @@ FROM q
     "a*b//1e6, and the float rho derives from that bounded integer via "
     "an identical literal on both engines.  Valid while S_xy*1e6 < "
     "1e38, i.e. n < 4.6e10 rows — the 100 TB order count.  Scale "
-    "posture (Spark side): the per-value rank tables come from "
-    "global_prefix_sums (one range-partition shuffle each, never a "
+    "posture (Spark side): the per-value rank tables and n come from "
+    "operators/rank.py prefix_sums (one range partition each, never a "
     "single-partition ORDER BY window — the oracle's windowed "
     "cumulative is DuckDB-only); facts join the two rank dimensions "
     "and reduce to one row of moments.",
     tags=("analytics",),
 )
 def analytics_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cobradb_spark.operators.rank import global_prefix_sums, pin_cache
+    from cobradb_spark.operators.rank import pin_cache, prefix_sums
 
     o = load_table(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("ok"),
@@ -3702,22 +3687,26 @@ def analytics_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the joined fact frame feeds BOTH value rollups and the final
     # moment join — pin it so the orders-lineitem join runs once
     f = pin_cache(o.join(li, "ok").select("x", "y"))
+    # c = 2 * (count below) + (count at) - n, with n the cnt total; n
+    # rides along on the small per-lineitem-count table
     gx = f.groupBy("x").agg(F.count("*").cast("long").alias("cnt"))
-    px, _fx, totx = global_prefix_sums(
-        gx, [F.col("x")], {"cnt": "less"}, with_frame_and_totals=True
+    rx = prefix_sums(gx, [], ["x"], ["cnt"]).select(
+        "x", (2 * F.col("cnt_before") + F.col("cnt") - F.col("cnt_total")).alias("cx")
     )
-    n = int(totx["cnt"])
-    rx = px.select("x", (2 * F.col("less") + F.col("cnt") - F.lit(n)).alias("cx"))
     gy = f.groupBy("y").agg(F.count("*").cast("long").alias("cnt"))
-    py = global_prefix_sums(gy, [F.col("y")], {"cnt": "less"})
-    ry = py.select("y", (2 * F.col("less") + F.col("cnt") - F.lit(n)).alias("cy"))
+    ry = prefix_sums(gy, [], ["y"], ["cnt"]).select(
+        "y",
+        (2 * F.col("cnt_before") + F.col("cnt") - F.col("cnt_total")).alias("cy"),
+        F.col("cnt_total").alias("n"),
+    )
     s = f.join(rx, "x").join(ry, "y").agg(
+        F.max("n").alias("n"),
         F.sum(F.expr("CAST(cx AS DECIMAL(19,0)) * cy")).alias("sxy"),
         F.sum(F.expr("CAST(cx AS DECIMAL(19,0)) * cx")).alias("sxx"),
         F.sum(F.expr("CAST(cy AS DECIMAL(19,0)) * cy")).alias("syy"),
     )
     return s.select(
-        F.lit(n).cast("bigint").alias("n_rows"),
+        F.col("n").cast("bigint").alias("n_rows"),
         F.col("sxy").cast("bigint").alias("s_xy"),
         F.col("sxx").cast("bigint").alias("s_xx"),
         F.col("syy").cast("bigint").alias("s_yy"),
@@ -3903,19 +3892,15 @@ FROM sel GROUP BY p
     "arm's p25/p50/p75/p90 is the EXACT type-1 quantile — the value at "
     "rank ceil(p*n/100), integer cross-multiplied, no interpolation, "
     "no floats anywhere.  Scale posture (Spark side): one fact rollup "
-    "to (arm, value, count), the per-arm cumulative from "
-    "global_prefix_sums over the composite (arm, value) total order + "
-    "broadcast 2-row arm offsets (never a per-arm single-partition "
-    "window — that is the oracle's DuckDB-only formulation), then a "
+    "to (arm, value, count), the per-arm cumulative and arm size "
+    "from operators/rank.py prefix_sums over the (arm, value) order "
+    "(never a per-arm single-partition window — that is the oracle's "
+    "DuckDB-only formulation), then a "
     "4-row quantile-grid broadcast join selects the straddling rows.",
     tags=("analytics",),
 )
 def analytics_quantile_treatment_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cobradb_spark.operators.rank import (
-        global_prefix_sums,
-        lit_map,
-        per_group_offsets,
-    )
+    from cobradb_spark.operators.rank import prefix_sums
 
     outcome = (
         load_table(spark, sf_dir, "orders")
@@ -3935,17 +3920,12 @@ def analytics_quantile_treatment_effect(spark: SparkSession, sf_dir: str) -> Dat
         ).alias("arm"),
     )
     g = armed.groupBy("arm", "y").agg(F.count("*").cast("bigint").alias("n"))
-    ps, tagged, _tots = global_prefix_sums(
-        g, [F.col("arm"), F.col("y")], {"n": "_ps"}, with_frame_and_totals=True
-    )
-    off, tot = per_group_offsets(tagged, "arm", ["n"])
-    off_m, tot_m = lit_map(off["n"]), lit_map(tot["n"])
-    c = ps.select(
+    c = prefix_sums(g, ["arm"], ["y"], ["n"]).select(
         "arm",
         "y",
         "n",
-        (F.col("_ps") - off_m[F.col("arm")]).cast("bigint").alias("cum_before"),
-        tot_m[F.col("arm")].cast("bigint").alias("n_arm"),
+        F.col("n_before").alias("cum_before"),
+        F.col("n_total").alias("n_arm"),
     )
     pgrid = spark.createDataFrame([(p,) for p in _QTE_PCTS], "p long")
     sel = c.join(

@@ -706,14 +706,14 @@ FROM b, UNNEST(range(s // 2048, ((e - 1) // 2048) + 1)) AS p(p)
     "end-to-end in doc_id order and cut into fixed 2048-token packs; a document "
     "straddling a boundary is split into per-pack segments with in-pack offsets "
     "— exactly what a packed-pretraining dataloader materializes.  The global "
-    "token offset comes from operators/rank.py global_prefix_sum (range "
+    "token offset comes from operators/rank.py prefix_sums (range "
     "partition + per-partition offset), NOT a single-partition running window — "
     "the 100 TB-safe form of the classic cumsum.  Deterministic, so the DuckDB "
     "window-cumsum oracle value-hashes every segment.",
     tags=("llm", "etl"),
 )
 def etl_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cobradb_spark.operators.rank import global_prefix_sum
+    from cobradb_spark.operators.rank import prefix_sums
 
     budget = 2048
     d = load_table(spark, sf_dir, "documents")
@@ -721,9 +721,9 @@ def etl_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.size(F.split("text", " ")).cast("long").alias("toks")
     )
     laid = (
-        global_prefix_sum(toks, [F.col("doc_id")], "toks", out_col="s")
+        prefix_sums(toks, [], ["doc_id"], ["toks"])
         .filter(F.col("toks") > 0)
-        .withColumn("e", F.col("s") + F.col("toks"))
+        .withColumns({"s": F.col("toks_before"), "e": F.col("toks_before") + F.col("toks")})
     )
     seg = laid.withColumn(
         "pack_id",

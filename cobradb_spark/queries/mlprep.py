@@ -1913,18 +1913,14 @@ FROM rk WHERE rn = 1
     "|cum_pos*n_neg - cum_neg*n_pos|*1e6 // (n_pos*n_neg) — no "
     "division per class, no float; the argmax score reports the "
     "decision threshold (first by score on ties — deterministic "
-    "(d DESC, cents) rank).  Scale posture: identical to "
-    "mlprep_roc_auc — one (segment, cents) grid rollup over facts, two "
-    "distributed prefix sums over the grid's composite total order, "
-    "5-row result.",
+    "(d DESC, cents) rank).  Scale posture: one (segment, cents) grid "
+    "rollup over facts, then per-segment cumulative counts and totals "
+    "from operators/rank.py prefix_sums (one range partition over the "
+    "grid), 5-row result.",
     tags=("mlprep",),
 )
 def mlprep_ks_statistic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cobradb_spark.operators.rank import (
-        global_prefix_sums,
-        lit_map,
-        per_group_offsets,
-    )
+    from cobradb_spark.operators.rank import prefix_sums
 
     o = load_table(spark, sf_dir, "orders")
     s = o.select(
@@ -1938,35 +1934,17 @@ def mlprep_ks_statistic(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").cast("bigint").alias("n"),
         F.sum("y").cast("bigint").alias("npos"),
     )
-    # Two distributed prefix sums over the composite (prio, cents) order
-    # (n and npos; cum_neg derives) + broadcast 5-row per-segment
-    # offsets/totals — the mlprep_roc_auc / agg_weighted_median_exact
-    # posture, never a per-segment running window over the price grid.
-    ps, tagged, _tots = global_prefix_sums(
-        g,
-        [F.col("prio"), F.col("cents")],
-        {"n": "_psn", "npos": "_psp"},
-        with_frame_and_totals=True,
-    )
-    # per-group totals aggregate the persisted frame (r8 ADVICE: not a
-    # second scan of g's unpersisted lineage)
-    off, tot = per_group_offsets(tagged, "prio", ["n", "npos"])
-    offn_m, offp_m = lit_map(off["n"]), lit_map(off["npos"])
-    ntot_m, npos_m = lit_map(tot["n"]), lit_map(tot["npos"])
-    c = ps.select(
+    # per-segment cumulative counts and totals over the cents order:
+    # the mlprep_roc_auc / agg_weighted_median_exact posture, never a
+    # per-segment running window over the price grid
+    cum_pos = F.col("npos_before") + F.col("npos")
+    c = prefix_sums(g, ["prio"], ["cents"], ["n", "npos"]).select(
         "prio",
         "cents",
-        (F.col("_psp") - offp_m[F.col("prio")] + F.col("npos"))
-        .cast("bigint")
-        .alias("cum_pos"),
-        (
-            (F.col("_psn") - offn_m[F.col("prio")] + F.col("n"))
-            - (F.col("_psp") - offp_m[F.col("prio")] + F.col("npos"))
-        )
-        .cast("bigint")
-        .alias("cum_neg"),
-        npos_m[F.col("prio")].cast("bigint").alias("n_pos"),
-        (ntot_m[F.col("prio")] - npos_m[F.col("prio")]).cast("bigint").alias("n_neg"),
+        cum_pos.alias("cum_pos"),
+        (F.col("n_before") + F.col("n") - cum_pos).alias("cum_neg"),
+        F.col("npos_total").alias("n_pos"),
+        (F.col("n_total") - F.col("npos_total")).alias("n_neg"),
     )
     d = c.select(
         "prio",
@@ -2363,11 +2341,7 @@ FROM c GROUP BY prio, n_pos, n_all
     tags=("mlprep",),
 )
 def mlprep_average_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cobradb_spark.operators.rank import (
-        global_prefix_sums,
-        lit_map,
-        per_group_offsets,
-    )
+    from cobradb_spark.operators.rank import prefix_sums
 
     o = load_table(spark, sf_dir, "orders")
     s = o.select(
@@ -2381,30 +2355,15 @@ def mlprep_average_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").cast("bigint").alias("n"),
         F.sum("y").cast("bigint").alias("npos"),
     )
-    ps, tagged, _tots = global_prefix_sums(
-        g,
-        [F.col("prio"), F.col("cents")],
-        {"n": "_psn", "npos": "_psp"},
-        with_frame_and_totals=True,
-    )
-    # per-group totals aggregate the persisted frame (r8 ADVICE: not a
-    # second scan of g's unpersisted lineage)
-    off, tot = per_group_offsets(tagged, "prio", ["n", "npos"])
-    offn_m, offp_m = lit_map(off["n"]), lit_map(off["npos"])
-    ntot_m, npos_m = lit_map(tot["n"]), lit_map(tot["npos"])
     # descending-inclusive cumulative = segment total - ascending
     # EXCLUSIVE prefix (rows with a strictly smaller score drop out)
-    c = ps.select(
+    c = prefix_sums(g, ["prio"], ["cents"], ["n", "npos"]).select(
         "prio",
         "npos",
-        (ntot_m[F.col("prio")] - (F.col("_psn") - offn_m[F.col("prio")]))
-        .cast("bigint")
-        .alias("cum_n"),
-        (npos_m[F.col("prio")] - (F.col("_psp") - offp_m[F.col("prio")]))
-        .cast("bigint")
-        .alias("cum_pos"),
-        npos_m[F.col("prio")].cast("bigint").alias("n_pos"),
-        ntot_m[F.col("prio")].cast("bigint").alias("n_all"),
+        (F.col("n_total") - F.col("n_before")).alias("cum_n"),
+        (F.col("npos_total") - F.col("npos_before")).alias("cum_pos"),
+        F.col("npos_total").alias("n_pos"),
+        F.col("n_total").alias("n_all"),
     )
     return (
         c.groupBy("prio", "n_pos", "n_all")

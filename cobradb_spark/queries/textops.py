@@ -1948,54 +1948,54 @@ WHERE rank <= {_VOCAB_TOP}
     "CAST AS BIGINT oracle-side.  Scale: the count "
     "is one map-side-combinable (word) rollup; the rank and running "
     "coverage over the FULL vocabulary run through the distributed "
-    "prefix-sum machinery (operators/rank.py global_prefix_sums — one "
+    "prefix-sum machinery (operators/rank.py prefix_sums — one "
     "range-partition shuffle, per-partition offsets via a K-row driver "
     "collect), NOT a single-partition ORDER BY window: r8 review "
     "flagged that the earlier 'vocab is dimension-scale (~1e5-1e6)' "
     "defense is false for raw web corpora, where whitespace-token "
     "vocabularies reach 1e8-1e9 at 100 TB.  Ranking is prefix-count of "
     "a literal 1 in the same shuffle, so rank + cumulative cost ONE "
-    "pass; the corpus-size total is a 1-row broadcast.",
+    "pass, and the corpus-size total is the same pass's cnt total.",
     tags=("textops", "llm"),
 )
 def text_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cobradb_spark.operators.rank import global_prefix_sums
+    from cobradb_spark.operators.rank import prefix_sums
 
     words = load_table(spark, sf_dir, "documents").select(
         F.explode(F.split("text", " ")).alias("w")
     )
     cnt = words.groupBy("w").agg(F.count("*").cast("long").alias("cnt"))
-    pre, _tagged, totals = global_prefix_sums(
+    pre = prefix_sums(
         cnt.withColumn("one", F.lit(1).cast("long")),
+        [],
         [F.col("cnt").desc(), F.col("w")],
-        {"one": "rank_before", "cnt": "cum_before"},
-        with_frame_and_totals=True,
+        ["one", "cnt"],
     )
-    # the corpus-size total is the final prefix accumulator — a literal,
-    # not a second word rollup over the documents scan
-    total = int(totals["cnt"])
+    # the corpus-size total is the cnt total — not a second word rollup
+    # over the documents scan
     ranked = pre.select(
         "w",
         "cnt",
-        (F.col("rank_before") + 1).alias("rank"),
-        (F.col("cum_before") + F.col("cnt")).alias("cum_cnt"),
+        (F.col("one_before") + 1).alias("rank"),
+        (F.col("cnt_before") + F.col("cnt")).alias("cum_cnt"),
+        F.col("cnt_total").alias("total"),
     ).filter(F.col("rank") <= _VOCAB_TOP)
     # widening rule (r8 overflow audit): cum_cnt*1e6 wraps BIGINT at
-    # ~9e12 corpus words, so the products run in DECIMAL(38,0); the
-    # coverage threshold 950000*total is exact Python-int arithmetic
-    # inlined as a DECIMAL literal.  Oracle side is HUGEINT already.
-    thresh = _VOCAB_COVER_PPM * total
+    # ~9e12 corpus words, so the products — the coverage threshold
+    # 950000*total too — run in DECIMAL(38,0).  Oracle side is HUGEINT
+    # already.
     return ranked.select(
         "rank",
         "w",
         "cnt",
         F.expr(
             "CAST(div(CAST(cum_cnt AS DECIMAL(38,0)) * 1000000,"
-            f" CAST({total} AS DECIMAL(38,0))) AS BIGINT)"
+            " CAST(total AS DECIMAL(38,0))) AS BIGINT)"
         ).alias("cum_ppm"),
         F.expr(
             "CAST(CASE WHEN CAST(cum_cnt - cnt AS DECIMAL(38,0)) * 1000000"
-            f" < CAST('{thresh}' AS DECIMAL(38,0)) THEN 1 ELSE 0 END AS BIGINT)"
+            f" < CAST(total AS DECIMAL(38,0)) * {_VOCAB_COVER_PPM}"
+            " THEN 1 ELSE 0 END AS BIGINT)"
         ).alias("in_cover95"),
     )
 

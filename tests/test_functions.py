@@ -90,18 +90,80 @@ def test_benford_constants_and_completeness(spark, sf_dir):
         assert 1_000_000 - 9 <= s <= 1_000_000  # truncating division undershoot
 
 
+def _replay_prefix_sums(rows, group, sort_key, values):
+    """Pure-Python prefix_sums: {uid: ({v: before}, {v: total})}."""
+    acc, before = {}, {}
+    for r in sorted(rows, key=sort_key):
+        g = tuple(r[c] for c in group)
+        run = acc.setdefault(g, dict.fromkeys(values, 0))
+        before[r["uid"]] = (g, dict(run))
+        for v in values:
+            run[v] += r[v]
+    return {uid: (b, acc[g]) for uid, (g, b) in before.items()}
+
+
+def test_prefix_sums_matches_bruteforce(spark):
+    """rank.prefix_sums equals a pure-Python replay of <v>_before and
+    <v>_total: grouped and ungrouped, groups straddling the range
+    boundaries at 2, 5 and 13 partitions, a one-row group, a null
+    group, duplicate order keys broken by uid, a descending order column
+    and an empty frame."""
+    import random
+
+    from cobradb_spark.operators.rank import prefix_sums, release_rank_caches
+    from pyspark.sql import functions as F
+
+    def check(rows, group, order, sort_key, num_parts):
+        df = spark.createDataFrame(rows, "uid long, grp long, a long, b long")
+        out = prefix_sums(df, group, order, ["a", "b"], num_parts=num_parts)
+        got = {
+            r.uid: ({"a": r.a_before, "b": r.b_before}, {"a": r.a_total, "b": r.b_total})
+            for r in out.collect()
+        }
+        release_rank_caches()
+        assert got == _replay_prefix_sums(rows, group, sort_key, ["a", "b"]), (
+            group,
+            order,
+            num_parts,
+        )
+
+    rng = random.Random(88)
+    for trial, num_parts in [(0, 2), (1, 5), (2, 13)]:
+        n = 80 + trial * 57
+        rows = [
+            dict(uid=i, grp=rng.randint(0, 9), a=rng.randint(0, 100), b=rng.randint(0, 5))
+            for i in range(n)
+        ]
+        rows.append(dict(uid=n, grp=42, a=7, b=3))  # a one-row group
+        rows += [dict(uid=n + 1 + i, grp=None, a=i, b=1) for i in range(2)]
+
+        def grp(r):  # Spark's ascending order puts nulls first
+            return (r["grp"] is not None, r["grp"])
+
+        # the whole frame as one group, over the composite (grp, uid) order
+        check(rows, [], ["grp", "uid"], lambda r: (grp(r), r["uid"]), num_parts)
+        # per group, duplicate `a` keys broken by uid
+        check(rows, ["grp"], ["a", "uid"], lambda r: (grp(r), r["a"], r["uid"]), num_parts)
+        # per group, descending `a`
+        check(
+            rows,
+            ["grp"],
+            [F.col("a").desc(), F.col("uid")],
+            lambda r: (grp(r), -r["a"], r["uid"]),
+            num_parts,
+        )
+
+    check([], ["grp"], ["uid"], lambda r: r["uid"], None)  # no rows at all
+
+
 def test_global_prefix_sums_matches_sequential(spark):
-    """Property: the distributed multi-column prefix sum equals the
+    """Property: the ungrouped multi-column prefix sum equals the
     single-threaded prefix computation for random multisets, any
     partition count, including duplicate order keys (total order comes
     from the unique tiebreaker)."""
     import random
 
-    from cobradb_spark.operators.rank import (
-        global_prefix_sums,
-        release_rank_caches,
-    )
-    from pyspark.sql import functions as F
+    from cobradb_spark.operators.rank import prefix_sums, release_rank_caches
 
     rng = random.Random(88)
     for trial, num_parts in [(0, 2), (1, 5), (2, 13)]:
@@ -111,12 +173,7 @@ def test_global_prefix_sums_matches_sequential(spark):
             for i in range(n)
         ]
         df = spark.createDataFrame(rows, "uid long, grp long, a long, b long")
-        out = global_prefix_sums(
-            df,
-            [F.col("grp"), F.col("uid")],
-            {"a": "pa", "b": "pb"},
-            num_parts=num_parts,
-        ).collect()
+        out = prefix_sums(df, [], ["grp", "uid"], ["a", "b"], num_parts=num_parts).collect()
         release_rank_caches()
         ordered = sorted(rows, key=lambda r: (r[1], r[0]))
         want_a = want_b = 0
@@ -126,8 +183,8 @@ def test_global_prefix_sums_matches_sequential(spark):
             want_a += a
             want_b += b
         for r in out:
-            ea, eb = expect[r.uid]
-            assert (r.pa, r.pb) == (ea, eb), (num_parts, r.uid)
+            assert (r.a_before, r.b_before) == expect[r.uid], (num_parts, r.uid)
+            assert (r.a_total, r.b_total) == (want_a, want_b), (num_parts, r.uid)
 
 
 # --- r12: cross-engine property fuzz for the H1-H4 + SimHash scalar

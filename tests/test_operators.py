@@ -120,10 +120,11 @@ def test_global_ntile_matches_sql_ntile(spark):
 def test_global_prefix_sum_exclusive(spark):
     from pyspark.sql import functions as F
 
-    from cobradb_spark.operators.rank import global_prefix_sum
+    from cobradb_spark.operators.rank import prefix_sums, release_rank_caches
 
     df = spark.createDataFrame([(i, (i * 3) % 7 + 1) for i in range(20)], "id long, w long")
-    out = {r.id: r.s for r in global_prefix_sum(df, [F.col("id").asc()], "w", "s").collect()}
+    out = {r.id: r.w_before for r in prefix_sums(df, [], [F.col("id").asc()], ["w"]).collect()}
+    release_rank_caches()
     acc = 0
     for i in range(20):
         assert out[i] == acc
@@ -180,62 +181,79 @@ def test_prefix_dot_matches_bruteforce(spark):
         spark.conf.set("spark.sql.shuffle.partitions", default)
 
 
+def _build_jobs(spark, sf_dir, key):
+    """The number of Spark jobs run while building `key`'s DataFrame,
+    counted by a status-tracker job group around the build."""
+    from cobradb_spark import registry
+
+    sc = spark.sparkContext
+    group = f"build-{key}"
+    sc.setJobGroup(group, group)
+    try:
+        registry.get_query(key).fn(spark, sf_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _load_tables(spark, sf_dir, tables):
+    """The first load of a table infers its parquet schema with a job;
+    the session-wide schema cache serves every later build."""
+    from cobradb_spark.io import load_events, load_table
+
+    for table in tables:
+        if table == "events":
+            load_events(spark, sf_dir)
+        else:
+            load_table(spark, sf_dir, table)
+
+
 def test_rank_sum_keys_build_without_jobs_or_pins(spark, sf_dir):
     """The prefix_dot keys fold their rank sums into the plan: building
     the frame runs no Spark job and pins nothing.  The range-partitioned
     rank of agg_quantile_exact_global is the control that the job
     group does see build-time jobs."""
-    from cobradb_spark import registry
-    from cobradb_spark.io import load_table
     from cobradb_spark.operators import rank
 
-    # the first load of a table infers its parquet schema with a job;
-    # the session-wide schema cache serves every later build
-    for table in ("orders", "lineitem"):
-        load_table(spark, sf_dir, table)
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-
-    def build_jobs(key):
-        group = f"build-{key}"
-        sc.setJobGroup(group, group)
-        try:
-            registry.get_query(key).fn(spark, sf_dir)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        return len(tracker.getJobIdsForGroup(group))
-
+    _load_tables(spark, sf_dir, ("orders", "lineitem"))
     try:
         pins = [id(df) for df in rank._PINNED]
         for key in ("mlprep_roc_auc", "agg_gini_spend"):
-            assert build_jobs(key) == 0, key
+            assert _build_jobs(spark, sf_dir, key) == 0, key
             assert [id(df) for df in rank._PINNED] == pins, key
-        assert build_jobs("agg_quantile_exact_global") > 0
+        assert _build_jobs(spark, sf_dir, "agg_quantile_exact_global") > 0
     finally:
         rank.release_rank_caches()
 
 
-def test_global_pct_rank_formulas(spark):
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
+# Spark jobs run while each per-group rank.prefix_sums key is built:
+# sampling the range boundaries, materializing the pinned frame and the
+# one per-(partition, group) collect, and nothing else — no second scan
+# of the input for group offsets or totals.
+_PREFIX_SUMS_BUILD_JOBS = {
+    "agg_weighted_median_exact": 6,
+    "agg_winsorized_trimmed_mean": 6,
+    "mlprep_ks_statistic": 6,
+    "mlprep_average_precision": 6,
+    "events_peak_concurrency": 5,
+    "analytics_quantile_treatment_effect": 7,
+}
 
-    from cobradb_spark.operators.rank import global_pct_rank
 
-    df = spark.range(9).select(F.col("id").alias("v"))
-    got = {
-        r.v: (round(r.pr, 9), round(r.cd, 9))
-        for r in global_pct_rank(df, [F.col("v").asc()]).collect()
-    }
-    w = Window.orderBy("v")
-    want = {
-        r.v: (round(r.pr, 9), round(r.cd, 9))
-        for r in df.select(
-            "v",
-            F.percent_rank().over(w).alias("pr"),
-            F.cume_dist().over(w).alias("cd"),
-        ).collect()
-    }
-    assert got == want
+def test_prefix_sums_keys_build_jobs(spark, sf_dir):
+    from cobradb_spark.operators.rank import release_rank_caches
+
+    _load_tables(spark, sf_dir, ("orders", "lineitem", "events"))
+    got = {}
+    for key in _PREFIX_SUMS_BUILD_JOBS:
+        # released after each key: ks and average precision range-
+        # partition the same grid, and a pinned frame left by one would
+        # serve the other from the cache
+        try:
+            got[key] = _build_jobs(spark, sf_dir, key)
+        finally:
+            release_rank_caches()
+    assert got == _PREFIX_SUMS_BUILD_JOBS
 
 
 def test_wav_decoder_parses_handbuilt_container(spark):

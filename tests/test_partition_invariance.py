@@ -100,7 +100,7 @@ PROBE_KEYS = [
     "text_burstiness_dispersion",
     "analytics_price_elasticity",
     # r9 keys with partition-order exposure: the vocab prefix-sum
-    # rewrite (rank/cum from global_prefix_sums must be layout-free),
+    # rewrite (rank/cum from rank.prefix_sums must be layout-free),
     # the Spearman double-rank grids, the QTE per-arm cumulative, the
     # propensity struct-min argmin, the LPA-driven modularity rollups,
     # and the JSD double sums (1e-9 rounded, must hold under 7 tasks)
@@ -126,6 +126,10 @@ PROBE_KEYS = [
     # rank.prefix_dot with no group: the bucket offsets come from one
     # window over the bucket table and must not depend on the layout
     "agg_gini_spend",
+    # rank.prefix_sums, per flag and with no group: the offsets and the
+    # per-partition windows must not depend on the shuffle layout
+    "agg_weighted_median_exact",
+    "etl_pack_sequences",
 ]
 
 

@@ -213,3 +213,24 @@ def test_plan_hash_ignores_detail_order_not_tree_order():
     assert canonical_plan_hash(a) == canonical_plan_hash(b)
     swapped = tree.replace("HashAggregate (3)\n+- Expand (2)", "Expand (3)\n+- HashAggregate (2)")
     assert canonical_plan_hash(swapped + a[len(tree):]) != canonical_plan_hash(a)
+
+
+def test_plan_hash_ignores_literal_map_contents(spark):
+    """rank.prefix_sums looks its offsets up in a literal map keyed by
+    (partition id, group) structs; its entries follow the partition
+    count and the sampled range boundaries, and the canonical hash must
+    not, or plans/HASHES.json would differ per machine."""
+    from cobradb_spark.operators.rank import prefix_sums, release_rank_caches
+
+    df = spark.createDataFrame(
+        [(i, "AN"[i % 2], i) for i in range(40)], "uid long, g string, v long"
+    )
+    try:
+        plans = [
+            formatted_plan(prefix_sums(df, ["g"], ["uid"], ["v"], num_parts=k))
+            for k in (3, 4)
+        ]
+    finally:
+        release_rank_caches()
+    assert "map(keys: [[" in plans[0] and plans[0] != plans[1]
+    assert canonical_plan_hash(plans[0]) == canonical_plan_hash(plans[1])

@@ -601,7 +601,7 @@ AUDITS = [
         ["rangepartitioning", "explode(sequence"],
         ["SinglePartition"],
         "the global token prefix-sum is range-partitioned + offset "
-        "(operators/rank.py global_prefix_sum), never a single-partition "
+        "(operators/rank.py prefix_sums), never a single-partition "
         "running window; boundary-straddling docs fan out via explode",
     ),
     (
@@ -950,10 +950,10 @@ AUDITS = [
         ["CartesianProduct", "SortMergeJoin", "BatchEvalPython"],
         "only the word rollup (map-side combined) touches corpus rows; "
         "rank + running coverage over the FULL vocabulary come from "
-        "global_prefix_sums (ONE range-partition shuffle, per-_pid "
+        "rank.prefix_sums (ONE range-partition shuffle, per-_pid "
         "windows) — no single-partition ORDER BY window even at "
-        "web-corpus vocab cardinality (1e8-1e9); the corpus total is a "
-        "1-row broadcast",
+        "web-corpus vocab cardinality (1e8-1e9); the corpus total is "
+        "the same pass's cnt total",
     ),
     (
         "text_cooccurrence_pmi",
@@ -1597,7 +1597,7 @@ AUDITS = [
         "analytics_spearman_corr",
         ["rangepartitioning", "partial_count"],
         ["CartesianProduct", "BatchEvalPython"],
-        "both rank dimensions come from global_prefix_sums (one range "
+        "both rank dimensions come from rank.prefix_sums (one range "
         "shuffle each, per-_pid windows); facts join the rank tables by "
         "value key and reduce to one row of 128-bit moments",
     ),
@@ -1613,9 +1613,10 @@ AUDITS = [
         "analytics_quantile_treatment_effect",
         ["rangepartitioning", "partial_count"],
         ["CartesianProduct", "BatchEvalPython"],
-        "per-arm cumulative from global_prefix_sums over the composite "
-        "(arm, value) order + broadcast 2-row offsets; the 4-row "
-        "quantile grid broadcasts into the straddle filter",
+        "per-arm cumulative and arm size from rank.prefix_sums over "
+        "the (arm, value) order, one range partition and per-(_pid, "
+        "arm) windows; the 4-row quantile grid broadcasts into the "
+        "straddle filter",
     ),
     (
         "mlprep_isotonic_calibration",
@@ -2118,7 +2119,7 @@ def _unpartitioned_window_violations(name: str, plan: str) -> list[str]:
     out.append(
         f"{name}: unpartitioned Window over input with no structural bound "
         f"(no TakeOrdered/GlobalLimit in plan; spec: {unpart[0][:80]!r}) — "
-        "use operators/rank.py global_rank/global_prefix_sums or allowlist "
+        "use operators/rank.py global_rank/prefix_sums or allowlist "
         "with a justification"
     )
     return out
