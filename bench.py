@@ -1,46 +1,34 @@
 """Headline benchmark — BASELINE.md protocol.
 
 Runs the six headline queries (matching the DuckDB-floor metrics in
-BASELINE.md §2) at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-one shared local[$SPARK_GRAFT_CPUS] session.  Per query: one untimed
-warmup (codegen/JIT), then 3 timed runs, median reported.  Results are
-materialized through the noop sink so the full plan executes without
-collect/serialization cost.
+BASELINE.md §2) and the 22-shape TPC-H track (q1 = the agg_basic pricing
+summary + the 21 sql_* keys) at $SPARK_GRAFT_SF_DIR (default
+/root/testdata/sf0.1) on one shared local[$SPARK_GRAFT_CPUS] session.
+Per query: one untimed warmup (codegen/JIT), then 3 timed runs through
+cobradb_spark/runner.py's noop sink, median reported.  `layers` holds
+the build / plan / execute split and job counts of each median run;
+`steal_jiffies` the host CPU steal summed over the timed runs.
 
-A second track (r5 verdict item 8) covers the full 22-shape TPC-H-style
-SQL suite (q1 = the agg_basic pricing summary + the 21 sql_* keys), so
-regressions outside the six headline queries surface in the per-round
-artifact too.  Same warmup + 3-run-median protocol per query; the suite
-total lands in `tpch_suite_seconds` / per-query in `tpch_queries`.
-
-A third artifact (r7 verdict item 4) pins environmental drift: two
-consecutive rounds showed uniform ~10-25% slowdowns on UNTOUCHED
-queries (0.58x -> 0.69x headline, 1.07x -> 1.17x TPC-H vs frozen
-numbers measured in different sessions), so a single absolute reading
-is no longer trustworthy as a regression signal.  The `ab` block runs
-an INTERLEAVED A/B — the previous round's frozen commit (git worktree)
-vs HEAD in fresh JVMs via tools/bench_once.py — so both variants see
-the same machine conditions and the ratio is environment-free.  Two
-r13-VERDICT de-confounds (three consecutive rounds read headline > 1
-with the excess entirely in the FIRST JVM of a session): (1) one
-DISCARDED WARMUP PAIR runs first — recorded in `warmup_discarded` for
-transparency, excluded from the medians — so one-time session costs
-(JIT profile seeding, OS page cache for parquet + imports) are paid
-before any measured run; (2) the measured pairs ALTERNATE side order
-(REF,HEAD then HEAD,REF ...) so neither side systematically runs
+Absolute seconds drift with the machine, so the `ab` block runs an
+INTERLEAVED A/B — the engine this one replaces (a git worktree of the
+first first-parent commit whose cobradb_spark/ differs from the working
+tree) vs this checkout, in fresh JVMs via tools/bench_once.py — so both
+variants see the same machine conditions.  One DISCARDED WARMUP PAIR
+runs first (recorded in `warmup_discarded`, excluded from the medians)
+so one-time session costs are paid before any measured run, and the
+measured pairs ALTERNATE side order so neither side systematically runs
 first.  Fail-soft: any git/subprocess problem degrades to
 "ab": {"error": ...} without touching the primary numbers.  Tunables:
-SPARK_GRAFT_AB=0 disables, SPARK_GRAFT_AB_REF overrides the frozen
-commit, SPARK_GRAFT_AB_PAIRS the measured pair count (default 4 — an
-EVEN count, so the alternation is exactly balanced; an odd count would
-leave one side first in a majority of pairs and reintroduce a residual
-order bias).
+SPARK_GRAFT_AB=0 disables, SPARK_GRAFT_AB_REF overrides the ref,
+SPARK_GRAFT_AB_PAIRS the measured pair count (default 4 — an EVEN
+count, so the alternation is exactly balanced).
 
 Prints TWO JSON lines (last complete line wins): the primary payload
 immediately —
   {"metric": "suite_seconds", "value": N, "unit": "sec",
    "queries": {...}, "sf": ...,
-   "tpch_suite_seconds": M, "tpch_queries": {...}}
+   "tpch_suite_seconds": M, "tpch_queries": {...},
+   "layers": {label: {...}}, "steal_jiffies": J}
 — then (unless SPARK_GRAFT_AB=0) the SAME payload re-emitted with the
 `ab` block added:
   {..., "ab": {"ref": sha, "ref_runs": [...], "head_runs": [...],
@@ -57,85 +45,52 @@ import os
 import statistics
 import subprocess
 import sys
-import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-from cobradb_spark import registry
-from cobradb_spark.operators.rank import release_rank_caches
-from cobradb_spark.session import get_spark
-
-HEADLINE = {
-    "q_pricing_summary": "agg_basic",
-    "q_join_topn": "join_topn_flagship",
-    "q_window_rank": "win_rank_topk_pergroup",
-    "q_sessionize": "stream_session_window",
-    "q_cosine_topk": "sim_cosine_topk",
-    "q_grouping_sets": "agg_grouping_sets",
-}
-
-
-def materialize(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
-
-
-def _timed_suite(spark, qs, sf_dir, labels: dict[str, str]) -> dict[str, float]:
-    results: dict[str, float] = {}
-    for label, name in labels.items():
-        fn = qs[name].fn
-        materialize(fn(spark, sf_dir))  # warmup: codegen + page cache
-        release_rank_caches()
-        times = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            materialize(fn(spark, sf_dir))
-            times.append(time.perf_counter() - t0)
-            release_rank_caches()
-        results[label] = round(statistics.median(times), 4)
-    return results
-
-
-# The previous round's artifacts commit: its tree carries that round's
-# final engine code, so "REF vs HEAD" is exactly "last round vs now".
-# Auto-detected from the driver's "round N: ..." commit convention so
-# the ref rolls forward each round without a manual edit; the hardcoded
-# fallback covers detection failure.
-_AB_FALLBACK_REF = "c1f74af"  # round 7 artifacts
 _REPO = os.path.dirname(os.path.abspath(__file__))
+sys.path[:0] = [_REPO, os.path.join(_REPO, "tools")]
+
+from bench_once import HEADLINE, tpch_keys  # noqa: E402
+
+from cobradb_spark import registry  # noqa: E402
+from cobradb_spark.runner import run  # noqa: E402
+from cobradb_spark.session import get_spark  # noqa: E402
+
+LAYERS = ("build_s", "build_jobs", "plan_s", "exec_s", "exec_jobs")
 
 
-def _detect_prev_round_ref() -> str:
-    """Newest 'round N:' artifacts commit that is NOT HEAD itself and
-    whose tree differs from HEAD's.  r8 ADVICE: a re-run after the
-    CURRENT round's artifacts commit lands would otherwise resolve REF
-    to that commit and silently A/B HEAD against itself (ratio ~1.0,
-    masking regressions) — guard on both sha equality and tree
-    equality, falling back to the next-older round commit."""
-    try:
-        out = subprocess.run(
-            ["git", "-C", _REPO, "log", "--grep", "^round [0-9]*:",
-             "-n", "2", "--format=%h"],
-            capture_output=True,
-            text=True,
-            timeout=30,
-            check=True,
-        )
-        head = subprocess.run(
-            ["git", "-C", _REPO, "rev-parse", "--short", "HEAD"],
-            capture_output=True, text=True, timeout=30, check=True,
-        ).stdout.strip()
-        for ref in out.stdout.split():
-            if ref == head:
-                continue  # self-compare: take the next-older round
-            same_tree = subprocess.run(
-                ["git", "-C", _REPO, "diff", "--quiet", ref, "HEAD"],
-                capture_output=True, timeout=30,
-            ).returncode == 0
-            if not same_tree:
-                return ref
-        return _AB_FALLBACK_REF
-    except Exception:  # noqa: BLE001 — fail-soft by contract
-        return _AB_FALLBACK_REF
+def _timed_suite(spark, sf_dir, labels: dict[str, str]) -> tuple[dict, dict, int]:
+    """Per label: one untimed warmup (codegen + page cache), then 3 timed
+    runs.  Returns the median totals, the layers of each median run and
+    the steal jiffies summed over the timed runs."""
+    results, layers, steal = {}, {}, 0
+    for label, key in labels.items():
+        run(spark, key, sf_dir)  # warmup
+        recs = [run(spark, key, sf_dir) for _ in range(3)]
+        failed = next((r for r in recs if r.error), None)
+        if failed:
+            raise RuntimeError(f"{key} failed:\n{failed.error}")
+        mid = sorted(recs, key=lambda r: r.total_s)[1]
+        results[label] = round(mid.total_s, 4)
+        layers[label] = {f: round(getattr(mid, f), 4) for f in LAYERS}
+        steal += sum(r.steal_jiffies for r in recs)
+    return results, layers, steal
+
+
+def _ab_ref() -> str:
+    """The first first-parent commit whose engine (cobradb_spark/) differs
+    from the working tree: HEAD when the engine is dirty, otherwise the
+    commit before the last engine-changing one.  The worktree A/B then
+    compares the engine under test with the one it replaces."""
+
+    def git(*args):
+        return subprocess.run(["git", "-C", _REPO, *args], capture_output=True,
+                              text=True, timeout=60, check=False)
+
+    dirty = bool(git("status", "--porcelain", "--", "cobradb_spark").stdout.strip())
+    for sha in git("rev-list", "--first-parent", "HEAD").stdout.split():
+        if dirty or git("diff", "--quiet", sha, "--", "cobradb_spark").returncode:
+            return sha[:12]
+    raise RuntimeError("no first-parent commit has a different engine")
 
 
 def _bench_once(repo_root: str, sf_dir: str) -> dict[str, float]:
@@ -153,7 +108,7 @@ def interleaved_ab(sf_dir: str) -> dict:
     """Fresh-JVM A/B: one discarded warmup pair, then `pairs` measured
     pairs with alternating side order; medians + ratio."""
     try:
-        ref = os.environ.get("SPARK_GRAFT_AB_REF") or _detect_prev_round_ref()
+        ref = os.environ.get("SPARK_GRAFT_AB_REF") or _ab_ref()
         pairs = int(os.environ.get("SPARK_GRAFT_AB_PAIRS", "4"))
         wt = f"/tmp/bench_ab_{ref}"
     except Exception as e:  # noqa: BLE001 — fail-soft by contract
@@ -170,8 +125,7 @@ def interleaved_ab(sf_dir: str) -> dict:
         return {"error": f"worktree: {e}"}
     try:
         # discarded warmup pair: pays the session's one-time costs so
-        # the FIRST measured JVM of each side starts warm (the r11-r13
-        # headline>1 readings were dominated by each session's first run)
+        # the FIRST measured JVM of each side starts warm
         warmup = {
             "ref": _bench_once(wt, sf_dir),
             "head": _bench_once(_REPO, sf_dir),
@@ -208,23 +162,20 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     spark = get_spark("bench")
-    qs = registry.all_queries()
-    results = _timed_suite(spark, qs, sf_dir, HEADLINE)
-    total = round(sum(results.values()), 4)
-    # 22-shape TPC-H track: q1's shape is the agg_basic pricing summary;
-    # the rest are the sql_* flagship keys.
-    tpch_labels = {"q1": "agg_basic"}
-    tpch_labels.update({n: n for n in sorted(qs) if n.startswith("sql_")})
-    tpch = _timed_suite(spark, qs, sf_dir, tpch_labels)
+    results, layers, steal = _timed_suite(spark, sf_dir, HEADLINE)
+    tpch, tpch_layers, tpch_steal = _timed_suite(
+        spark, sf_dir, {("q1" if k == "agg_basic" else k): k for k in tpch_keys(registry.all_queries())})
     spark.stop()  # free the JVM before the A/B subprocesses spin theirs
     payload = {
         "metric": "suite_seconds",
-        "value": total,
+        "value": round(sum(results.values()), 4),
         "unit": "sec",
         "queries": results,
         "sf": float(sf),
         "tpch_suite_seconds": round(sum(tpch.values()), 4),
         "tpch_queries": tpch,
+        "layers": {**layers, **tpch_layers},
+        "steal_jiffies": steal + tpch_steal,
     }
     # Emit the primary numbers IMMEDIATELY (and flush): if a harness
     # timeout kills the slower A/B phase below, the last complete JSON

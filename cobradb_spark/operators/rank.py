@@ -48,20 +48,20 @@ from pyspark.sql.types import ArrayType, LongType, MapType, StructType
 # an unpersisted recompute could resample different boundaries), so the
 # frames cannot be unpersisted inside the operator.
 #
-# RELEASE CONTRACT (round-4 ADVICE — this is module API, not an
-# implementation detail): every pin()/pin_cache() leaks a persisted
-# frame until release_rank_caches() runs.  The repo's harnesses —
-# bench.py, tools/check.py, tools/bench_once.py, tools/op_sweep.py,
-# tools/scaling_probe.py and perfbench/worker.py — call it after each
-# query's result is collected; tools/plan_audit.py and
-# tools/explain_dump.py after each key's plan.  No query build calls
-# it: that would drain pins another built-but-unexecuted query still
-# relies on.  __spark_entry__ does not: under the
-# external verify driver the pins live until its session ends.  Any
-# OTHER caller that materializes its result must call
-# release_rank_caches() itself once the result is collected.  Guarded
-# by a lock: the registry is shared module state and query builds may
-# race from multiple threads.
+# RELEASE CONTRACT (module API, not an implementation detail): every
+# pin()/pin_cache() leaks a persisted frame until release_rank_caches()
+# runs.  cobradb_spark/runner.run calls it once per run, in a finally,
+# after the result is materialized; every timing and checking harness
+# (bench.py, tools/bench_once.py, tools/op_sweep.py, tools/check.py)
+# runs keys through it.  The plan-only tools, tools/plan_audit.py and
+# tools/explain_dump.py, call it after each key's plan, and
+# perfbench/worker.py after each key's run.  No query build calls it:
+# that would drain pins another built-but-unexecuted query still relies
+# on.  __spark_entry__ does not: under the external verify driver the
+# pins live until its session ends.  Any OTHER caller that materializes
+# its result must call release_rank_caches() itself once the result is
+# collected.  Guarded by a lock: the registry is shared module state and
+# query builds may race from multiple threads.
 _PINNED: list[DataFrame] = []
 _PINNED_LOCK = threading.Lock()
 
@@ -81,8 +81,9 @@ def pin_cache(df: DataFrame) -> DataFrame:
     """persist() a frame that multiple downstream subtrees re-evaluate,
     registered for release_rank_caches() — the query-local caching idiom
     (iterative graph loops, multi-reference edge lists).  See the
-    RELEASE CONTRACT above: callers outside the standard harnesses must
-    call release_rank_caches() after materializing their result."""
+    RELEASE CONTRACT above: callers that do not run keys through
+    cobradb_spark/runner.run must call release_rank_caches() after
+    materializing their result."""
     return pin(df.persist())
 
 

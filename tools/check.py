@@ -20,7 +20,6 @@ import argparse
 import math
 import os
 import sys
-import time
 import traceback
 
 import duckdb
@@ -30,7 +29,7 @@ import pandas as pd
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from cobradb_spark import registry
-from cobradb_spark.operators.rank import release_rank_caches
+from cobradb_spark.runner import run
 from cobradb_spark.schemas import TABLES
 from cobradb_spark.session import get_spark
 
@@ -225,38 +224,31 @@ def main() -> int:
     n_fail = 0
     for name in names:
         q = qs[name]
-        t0 = time.time()
-        try:
-            out = q.fn(spark, args.sf)
-            # Driver-parity guard (r3 verdict item 2): the driver's pandas
-            # canonicalizer cannot hash array/map/struct cells, so any
-            # oracle-carrying query that ships a non-scalar output column
-            # is a guaranteed driver ERR even when values match locally
-            # (this harness tuple-izes arrays; the driver does not).
-            # Local green must imply driver green -> hard FAIL here.
-            if q.oracle is not None:
-                bad_cols = [
-                    f.name
-                    for f in out.schema.fields
-                    if f.dataType.typeName() in ("array", "map", "struct")
-                ]
-                if bad_cols:
-                    print(
-                        f"[FAIL ] {name}: non-scalar output columns {bad_cols} — "
-                        "driver canonicalizer cannot hash these; project "
-                        "to_json/concat_ws instead"
-                    )
-                    n_fail += 1
-                    continue
-            sdf = out.toPandas()
-        except Exception:
-            print(f"[FAIL ] {name}: spark raised\n{traceback.format_exc()}")
+        rec = run(spark, name, args.sf, sink="pandas")
+        if rec.error:
+            print(f"[FAIL ] {name}: spark raised\n{rec.error}")
             n_fail += 1
             continue
-        finally:
-            release_rank_caches()  # result materialized (or dead) — drop pins
+        sdf = rec.frame
         if q.oracle is None:
-            print(f"[ROWS ] {name}: {len(sdf)} rows ({time.time()-t0:.1f}s, no oracle)")
+            print(f"[ROWS ] {name}: {len(sdf)} rows ({rec.total_s:.1f}s, no oracle)")
+            continue
+        # Driver-parity guard: the driver's pandas canonicalizer cannot
+        # hash array/map/struct cells, so any oracle-carrying query that
+        # ships a non-scalar output column is a guaranteed driver ERR
+        # even when values match locally (this harness tuple-izes arrays;
+        # the driver does not).  Local green must imply driver green.
+        bad_cols = [
+            f.name for f in rec.schema.fields
+            if f.dataType.typeName() in ("array", "map", "struct")
+        ]
+        if bad_cols:
+            print(
+                f"[FAIL ] {name}: non-scalar output columns {bad_cols} — "
+                "driver canonicalizer cannot hash these; project "
+                "to_json/concat_ws instead"
+            )
+            n_fail += 1
             continue
         try:
             ddf = con.execute(q.oracle).df()
@@ -268,7 +260,7 @@ def main() -> int:
         tag = {"EXACT": "OK   ", "NEAR": "NEAR ", "FAIL": "FAIL "}[status]
         if status == "FAIL":
             n_fail += 1
-        print(f"[{tag}] {name}: {msg} ({time.time()-t0:.1f}s)")
+        print(f"[{tag}] {name}: {msg} ({rec.total_s:.1f}s)")
     print(f"\n{len(names)} checked, {n_fail} failed")
     return 1 if n_fail else 0
 
