@@ -11,7 +11,7 @@ joins/aggregations/windows, plus streaming and LLM-data-pipeline
 operators designed for 100 TB scale (SURVEY.md §2 is the contract).
 """
 
-from cobradb_spark.registry import all_queries, get_query, oracle_map  # noqa: F401
-from cobradb_spark.session import get_spark  # noqa: F401
-
+# No package-level re-exports: a Python worker unpickling one UDF, or the
+# pydaemon worker daemon before it forks, imports this package, and must
+# not pull in the whole query registry.  Import registry / session directly.
 __version__ = "0.1.0"

@@ -145,9 +145,12 @@ WHERE CAST(i.both AS DOUBLE) / (sa.n + sb.n - i.both) >= 0.5
 """,
     doc="Exact n-gram (word-bigram) Jaccard dedup via inverted index: explode "
     "distinct shingles, self-join on the posting list, |A∩B| by count, Jaccard "
-    "from set sizes. The scalable exact method — cost follows shared shingles, "
-    "not n^2. Hot shingles skew the join at scale: drop stop-shingles above a "
-    "document-frequency cap (not needed at fixture scale).",
+    "from set sizes. Exact, but not linear: the bigram self-join costs df^2 "
+    "pair rows per common bigram of document frequency df (on 4 cores, 0.48 s "
+    "at sf0.01 and 17.06 s at sf0.1, 35x on 10x data, all of it in execution). "
+    "A document-frequency cap would drop true pairs; the exact fix is prefix "
+    "filtering (AllPairs: index only each document's rarest bigrams, then "
+    "verify the candidates), not implemented yet.",
 )
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
