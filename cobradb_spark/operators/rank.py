@@ -6,18 +6,20 @@ partition (Catalyst plans a single-partition window) — the classic
 two shapes chosen by what the consumer does with the rank.
 
 Per-row consumers (a quantile pick, a running maximum, ntile, a
-winsorized cut) need the rank or prefix ON each row.  global_rank and
-prefix_sums compute it, grouped or not, from one range partition:
+winsorized cut, a rolling frame's x) need the rank or prefix ON each
+row.  They all go through prefix_sums (global_rank is the prefix sum of
+a literal 1), which computes it, grouped or not, from one range
+partition:
 
 1. `repartitionByRange` on the (group, order) keys — partition i holds
    a contiguous, disjoint key range, ranges ascending with partition
    id;
-2. ONE driver collect of per-partition (per-(partition, group) for
-   prefix_sums) counts or sums — at most K + |groups| tiny rows —
-   prefix-summed into per-partition offsets and group totals;
+2. ONE driver collect of per-(partition, group) sums — at most
+   K + |groups| tiny rows — prefix-summed into per-partition offsets
+   and group totals;
 3. a window PARTITIONED by the range-partition id (so it shuffles by
-   pid, never collapses to one task) computes the local row_number or
-   running sum, and `offset + local` is the exact rank or prefix.
+   pid, never collapses to one task) computes the local running sum,
+   and `offset + local` is the exact prefix.
 
 Ties must be fully broken by the order keys (callers append a unique
 key), which makes the result independent of where the sampled range
@@ -49,32 +51,26 @@ from pyspark.sql.types import ArrayType, LongType, MapType, StructType
 # frames cannot be unpersisted inside the operator.
 #
 # RELEASE CONTRACT (module API, not an implementation detail): every
-# pin()/pin_cache() leaks a persisted frame until release_rank_caches()
-# runs.  cobradb_spark/runner.run calls it once per run, in a finally,
-# after the result is materialized; every timing and checking harness
-# (bench.py, tools/bench_once.py, tools/op_sweep.py, tools/check.py)
-# runs keys through it.  The plan-only tools, tools/plan_audit.py and
-# tools/explain_dump.py, call it after each key's plan, and
-# perfbench/worker.py after each key's run.  No query build calls it:
-# that would drain pins another built-but-unexecuted query still relies
-# on.  __spark_entry__ does not: under the external verify driver the
-# pins live until its session ends.  Any OTHER caller that materializes
-# its result must call release_rank_caches() itself once the result is
-# collected.  Guarded by a lock: the registry is shared module state and
-# query builds may race from multiple threads.
+# pin_cache() leaks a persisted frame until release_rank_caches() runs.
+# Two kinds of frame are pinned: prefix_sums' range-partitioned frame
+# (global_rank, global_ntile and the rolling-OLS x in queries/windows.py
+# all reach it through prefix_sums, so windows.py pins nothing itself)
+# and the query-local caches handed to pin_cache (graph loops, text and
+# analytics keys).  cobradb_spark/runner.run calls release_rank_caches()
+# once per run, in a finally, after the result is materialized; every
+# timing and checking harness (bench.py, tools/bench_once.py,
+# tools/op_sweep.py, tools/check.py) runs keys through it.  The plan-only
+# tools, tools/plan_audit.py and tools/explain_dump.py, call it after
+# each key's plan, and perfbench/worker.py after each key's run.  No
+# query build calls it: that would drain pins another
+# built-but-unexecuted query still relies on.  __spark_entry__ does not:
+# under the external verify driver the pins live until its session
+# ends.  Any OTHER caller that materializes its result must call
+# release_rank_caches() itself once the result is collected.  Guarded by
+# a lock: the registry is shared module state and query builds may race
+# from multiple threads.
 _PINNED: list[DataFrame] = []
 _PINNED_LOCK = threading.Lock()
-
-
-def pin(df: DataFrame) -> DataFrame:
-    """Register an ALREADY-persisted frame for release_rank_caches().
-
-    For frames persisted inside an operator (e.g. a range-partitioned
-    frame tagged with its partition id) that must outlive the function
-    until the caller collects."""
-    with _PINNED_LOCK:
-        _PINNED.append(df)
-    return df
 
 
 def pin_cache(df: DataFrame) -> DataFrame:
@@ -84,7 +80,10 @@ def pin_cache(df: DataFrame) -> DataFrame:
     RELEASE CONTRACT above: callers that do not run keys through
     cobradb_spark/runner.run must call release_rank_caches() after
     materializing their result."""
-    return pin(df.persist())
+    df = df.persist()
+    with _PINNED_LOCK:
+        _PINNED.append(df)
+    return df
 
 
 def release_rank_caches() -> int:
@@ -107,78 +106,55 @@ def _range_tagged(df: DataFrame, order_cols: list, num_parts: int | None) -> Dat
     the core count) partitions, each row tagged with its partition id
     `_pid`, persisted and pinned."""
     k = num_parts or max(df.sparkSession.sparkContext.defaultParallelism, 2)
-    return pin(
-        df.repartitionByRange(k, *order_cols)
-        .withColumn("_pid", F.spark_partition_id())
-        .persist()
+    return pin_cache(
+        df.repartitionByRange(k, *order_cols).withColumn("_pid", F.spark_partition_id())
     )
-
-
-def global_rank_with_total(
-    df: DataFrame, order_cols: list[Column], rank_col: str, num_parts: int | None = None
-) -> tuple[DataFrame, int]:
-    """Shared core: (frame with exact global row_number, total row count).
-
-    The total is free — it is the final prefix-sum accumulator — so
-    callers that need n (ntile) pay no extra action."""
-    tagged = _range_tagged(df, order_cols, num_parts)
-    counts = {r._pid: r["count"] for r in tagged.groupBy("_pid").count().collect()}
-    offsets, acc = {}, 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    off_map = F.create_map(
-        *[F.lit(x) for pid_off in offsets.items() for x in pid_off]
-    )
-    w = Window.partitionBy("_pid").orderBy(*order_cols)
-    ranked = (
-        tagged.withColumn(
-            rank_col, (off_map[F.col("_pid")] + F.row_number().over(w)).cast("long")
-        )
-        .drop("_pid")
-    )
-    return ranked, acc
 
 
 def global_rank(
-    df: DataFrame, order_cols: list[Column], rank_col: str = "rank", num_parts: int | None = None
+    df: DataFrame, order_cols: list, rank_col: str = "rank", num_parts: int | None = None
 ) -> DataFrame:
-    """Add `rank_col` = exact global row_number by `order_cols`, distributed.
+    """Add `rank_col` = exact global row_number by `order_cols` and
+    `<rank_col>_n` = the row count, distributed: the rank is the
+    inclusive prefix sum of a literal 1, the count that sum's total.
 
     `order_cols` must define a TOTAL order (append a unique tiebreaker).
     """
-    ranked, _ = global_rank_with_total(df, order_cols, rank_col, num_parts)
-    return ranked
+    ones = df.withColumn(rank_col, F.lit(1).cast("long"))
+    return prefix_sums(ones, [], order_cols, [rank_col], num_parts).select(
+        *[c for c in ones.columns if c != rank_col],
+        (F.col(f"{rank_col}_before") + 1).alias(rank_col),
+        F.col(f"{rank_col}_total").alias(f"{rank_col}_n"),
+    )
 
 
 def global_ntile(
     df: DataFrame,
-    order_cols: list[Column],
+    order_cols: list,
     k: int,
     out_col: str,
     num_parts: int | None = None,
 ) -> DataFrame:
     """Exact SQL ntile(k) by `order_cols` WITHOUT a single-partition
-    window: bucket = closed-form function of the distributed global rank
-    and the total count n (first n%k buckets hold ceil(n/k) rows, the
-    rest floor(n/k)) — identical to the standard ntile semantics when
-    `order_cols` is a total order."""
+    window: ntile_expr of the distributed global rank and row count."""
     rank_col = "_ntile_rn"
     while rank_col in df.columns:
         rank_col += "_"
-    ranked, n = global_rank_with_total(df, order_cols, rank_col, num_parts)
-    return ranked.withColumn(
-        out_col, ntile_expr(F.col(rank_col), n, k).cast("long")
-    ).drop(rank_col)
+    rn, n = F.col(rank_col), F.col(f"{rank_col}_n")
+    return (
+        global_rank(df, order_cols, rank_col, num_parts)
+        .withColumn(out_col, ntile_expr(rn, n, k).cast("long"))
+        .drop(rank_col, f"{rank_col}_n")
+    )
 
 
-def ntile_expr(rn: Column, n: int, k: int) -> Column:
+def ntile_expr(rn: Column, n: Column, k: int) -> Column:
     """Closed-form SQL ntile(k) bucket for global row_number `rn` over a
-    total order of n rows: the first n%k buckets hold ceil(n/k) rows,
-    the rest floor(n/k)."""
-    q, r = divmod(n, k)
-    if q == 0:  # fewer rows than buckets: one row per bucket
-        return rn
+    total order of `n` rows: the first n%k buckets hold ceil(n/k) rows,
+    the rest floor(n/k).  With fewer rows than buckets (q = 0) every
+    row is in the head, so the division by q is never evaluated."""
+    r = n % k
+    q = ((n - r) / k).cast("long")  # exact: n - r is a multiple of k
     head = r * (q + 1)  # rows living in the size-(q+1) buckets
     return F.when(rn <= head, F.ceil(rn / (q + 1))).otherwise(
         r + F.ceil((rn - head) / q)
@@ -195,7 +171,8 @@ def prefix_sums(
     """Add `<v>_before` and `<v>_total` for each integral column v in
     `values`: the EXCLUSIVE prefix sum of v within the row's group in
     the order `order_cols`, and the sum of v over the group.
-    `group_cols=[]` makes the whole frame one group.
+    `group_cols=[]` makes the whole frame one group, whose `<v>_total`
+    is a literal.
 
     The frame is range-partitioned by the composite (group_cols,
     order_cols) order.  ONE driver collect of sum(v) per (partition,
@@ -249,6 +226,9 @@ def prefix_sums(
         .orderBy(*group_cols, *order_cols)
         .rowsBetween(Window.unboundedPreceding, -1)
     )
+    # with no groups the totals are constants, which the optimizer folds
+    # into whatever reads them (an ntile's bounds, a rank pick)
+    one = grp_total.get((), [0] * n)
     # totals in a second projection: in the window's projection they
     # would be evaluated below it and widen its shuffle
     return (
@@ -258,7 +238,12 @@ def prefix_sums(
                 for i, v in enumerate(values)
             }
         )
-        .withColumns({f"{v}_total": lookup[n + i] for i, v in enumerate(values)})
+        .withColumns(
+            {
+                f"{v}_total": lookup[n + i] if group_cols else F.lit(one[i]).cast("long")
+                for i, v in enumerate(values)
+            }
+        )
         .drop("_pid")
     )
 

@@ -563,35 +563,28 @@ FROM res, nn GROUP BY nn.n
 def agg_quantile_exact_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     import math
 
-    from cobradb_spark.operators.rank import global_rank_with_total
+    from cobradb_spark.operators.rank import global_rank
 
     li = load_table(spark, sf_dir, "lineitem").select(
         F.col("l_extendedprice").alias("x"), "l_orderkey", "l_linenumber"
     )
-    ranked, n = global_rank_with_total(
+    ranked = global_rank(
         li, [F.col("x"), F.col("l_orderkey"), F.col("l_linenumber")], "rn"
     )
-    targets = {}
-    need = set()
+    # ranks lo and lo + 1 of each quantile, lo = floor(q*(n-1)) + 1: the
+    # same double product Python forms below.  rn_n is a literal, so the
+    # targets fold into one set-membership test of rn
+    lo = [F.floor(F.lit(q) * (F.col("rn_n") - 1)) + 1 for q in _QUANTILES]
+    pick = F.col("rn").isin(*[r + d for r in lo for d in (0, 1)])
+    rows = ranked.filter(pick).select("rn", "rn_n", "x").collect()  # <= 8 rows
+    got = {r["rn"]: r["x"] for r in rows}
+    n = rows[0]["rn_n"]
+    row = [n]
     for q in _QUANTILES:
-        lo = math.floor(q * (n - 1)) + 1
-        f = q * (n - 1) - math.floor(q * (n - 1))
-        targets[q] = (lo, f)
-        need.add(lo)
-        if lo + 1 <= n:
-            need.add(lo + 1)
-    got = {
-        r["rn"]: r["x"]
-        for r in ranked.filter(F.col("rn").isin(sorted(need)))
-        .select("rn", "x")
-        .collect()  # bounded: at most 2 * len(_QUANTILES) rows
-    }
-    out = {}
-    for q, (lo, f) in targets.items():
-        xlo = got[lo]
-        xhi = got.get(lo + 1, xlo)
-        out[q] = xlo + f * (xhi - xlo)
-    row = [int(n)] + [out[q] for q in _QUANTILES]
+        t = q * (n - 1)
+        xlo = got[math.floor(t) + 1]
+        xhi = got.get(math.floor(t) + 2, xlo)
+        row.append(xlo + (t - math.floor(t)) * (xhi - xlo))
     cols = ["n_rows"] + [f"p{str(q)[2:]}" for q in _QUANTILES]
     return spark.createDataFrame(
         [tuple(row)],

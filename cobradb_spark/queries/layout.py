@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from cobradb_spark.io import load_table
-from cobradb_spark.operators.rank import global_rank
+from cobradb_spark.operators.rank import global_ntile, global_rank
 from cobradb_spark.registry import register
 
 _BITS = 16
@@ -124,25 +124,16 @@ FROM t GROUP BY bucket
     "are disjoint and every range predicate prunes to ~1/16 of the files. "
     "Production derives the same plan from a sample; the fixture computes "
     "it exactly to keep the oracle bit-stable. ntile is DERIVED from the "
-    "distributed global rank (operators/rank.py) and the total count — "
-    "first N%16 buckets get the extra row, matching SQL ntile exactly — "
-    "so no single-partition window anywhere in the plan.",
+    "distributed global rank (operators/rank.py global_ntile) and the row "
+    "count that rides on every ranked row — first N%16 buckets get the "
+    "extra row, matching SQL ntile exactly — so the ranked rows are "
+    "aggregated once and no single-partition window or count is in the "
+    "plan.",
 )
 def etl_range_partition_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select("o_totalprice", "o_orderkey")
-    ranked = global_rank(o, [F.col("o_totalprice"), F.col("o_orderkey")], rank_col="rn")
-    total = ranked.agg(F.count("*").alias("n_total"))
-    t = ranked.crossJoin(F.broadcast(total))
-    # SQL ntile(k): first rem = N%k buckets hold q+1 rows (q = N//k)
-    q = F.floor(F.col("n_total") / 16)
-    rem = F.col("n_total") % 16
-    big = rem * (q + 1)  # rows covered by the first rem (larger) buckets
-    r0 = F.col("rn") - 1
-    bucket = F.when(F.col("rn") <= big, F.floor(r0 / (q + 1)) + 1).otherwise(
-        rem + F.floor((r0 - big) / q) + 1
-    )
     return (
-        t.select("o_totalprice", bucket.cast("long").alias("bucket"))
+        global_ntile(o, [F.col("o_totalprice"), F.col("o_orderkey")], 16, "bucket")
         .groupBy("bucket")
         .agg(
             F.count("*").alias("n"),

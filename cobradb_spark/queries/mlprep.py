@@ -1454,15 +1454,14 @@ GROUP BY cls
     "keep count plus an order-independent key checksum so the exact "
     "membership is value-hashed. Scale: the per-class rank does NOT "
     "use a |classes|-partition window (the 3-task parallelism trap) — "
-    "it is the exact distributed rank over the (class, draw, key) "
-    "total order (operators/rank.py: range-partition + offset "
-    "prefix-sum) with per-class offsets subtracted from a 3-row "
-    "broadcast; class counts and n_min come from one tiny aggregate "
-    "(bounded collect, |classes| rows).",
+    "it is the grouped operators/rank.py prefix_sums count over the "
+    "(class; draw, key) order (one range partition, per-(partition, "
+    "class) offsets); n_min comes from one tiny aggregate (bounded "
+    "collect, |classes| rows).",
     tags=("mlprep",),
 )
 def mlprep_undersample_balanced(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cobradb_spark.operators.rank import global_rank
+    from cobradb_spark.operators.rank import prefix_sums
 
     t = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -1470,21 +1469,14 @@ def mlprep_undersample_balanced(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.md5(F.concat(F.lit("us"), F.col("o_orderkey").cast("string"))).alias(
             "draw"
         ),
+        F.lit(1).cast("long").alias("one"),
     )
     # bounded collect: one row per class (|classes| = 3 on this schema)
-    counts = {r.cls: r.n for r in t.groupBy("cls").agg(F.count("*").alias("n")).collect()}
-    n_min = min(counts.values())
-    offsets, acc = {}, 0
-    for cls in sorted(counts):
-        offsets[cls] = acc
-        acc += counts[cls]
-    off_map = F.create_map(*[F.lit(x) for co in offsets.items() for x in co])
-    ranked = global_rank(
-        t, [F.col("cls"), F.col("draw"), F.col("o_orderkey")], rank_col="_grk"
+    n_min = min(r["count"] for r in t.groupBy("cls").count().collect())
+    # per-class row_number = the inclusive prefix count of a literal 1
+    kept = prefix_sums(t, ["cls"], ["draw", "o_orderkey"], ["one"]).filter(
+        F.col("one_before") < n_min
     )
-    kept = ranked.withColumn(
-        "_rn", F.col("_grk") - off_map[F.col("cls")]
-    ).filter(F.col("_rn") <= n_min)
     return kept.groupBy("cls").agg(
         F.count("*").cast("bigint").alias("n_kept"),
         F.sum("o_orderkey").cast("bigint").alias("key_checksum"),
@@ -1656,7 +1648,7 @@ FROM d CROSS JOIN t
     tags=("mlprep", "aggregates"),
 )
 def mlprep_lorenz_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cobradb_spark.operators.rank import global_rank_with_total, ntile_expr
+    from cobradb_spark.operators.rank import global_ntile
 
     o = load_table(spark, sf_dir, "orders")
     pc = o.groupBy(F.col("o_custkey").alias("cust")).agg(
@@ -1664,9 +1656,8 @@ def mlprep_lorenz_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("cents")
     )
-    ranked, n = global_rank_with_total(pc, [F.col("cents"), F.col("cust")], "rk")
     d = (
-        ranked.withColumn("decile", ntile_expr(F.col("rk"), n, 10))
+        global_ntile(pc, [F.col("cents"), F.col("cust")], 10, "decile")
         .groupBy(F.col("decile").cast("bigint").alias("decile"))
         .agg(
             F.count("*").cast("bigint").alias("n_customers"),

@@ -142,13 +142,12 @@ WINDOW w AS (ORDER BY p_retailprice, p_partkey)
     "pr = (rn-1)/(n-1), cd = rn/n.  One range exchange; survives 100 TB.",
 )
 def win_ntile_pctrank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cobradb_spark.operators.rank import global_rank_with_total, ntile_expr
+    from cobradb_spark.operators.rank import global_rank, ntile_expr
 
     p = load_table(spark, sf_dir, "part")
     order = [F.col("p_retailprice").asc(), F.col("p_partkey").asc()]
-    ranked, n = global_rank_with_total(p, order, "_rn")
-    rn = F.col("_rn")
-    return ranked.select(
+    rn, n = F.col("_rn"), F.col("_rn_n")
+    return global_rank(p, order, "_rn").select(
         "p_partkey",
         ntile_expr(rn, n, 4).cast("long").alias("price_quartile"),
         F.round((rn - 1) / (n - 1), 9).alias("pr"),
@@ -340,6 +339,11 @@ def win_running_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _OLS_WIN = 50  # rolling-frame width (rows)
+# rows per frame-window chunk of a series; a chunk's carry-in comes
+# from the one chunk before it only while a chunk is at least as long
+# as the carry
+_OLS_CHUNK = 1 << 16
+assert _OLS_CHUNK >= _OLS_WIN - 1
 
 
 @register(
@@ -378,105 +382,45 @@ FROM s WHERE n >= 2
     "identical (a raw double frame sum would differ: DuckDB aggregates "
     "frames via segment trees, Spark sequentially). Scale design (r6 "
     "verdict: a window PARTITIONed BY event_type alone funnels the "
-    "stream into 5 tasks): the series is RANGE-CHUNKED with the "
-    "operators/rank.py machinery — repartitionByRange on (event_type, "
-    "ts, event_id), per-(chunk, type) counts to the driver (K x |types| "
-    "tiny rows) yield exact global x offsets, and each chunk receives "
-    f"the previous chunks' {_OLS_WIN - 1}-row tails as carry-in copies "
-    "so every rolling frame is complete INSIDE its (chunk, type) "
-    "window partition; carry rows are dropped from the output. "
-    "Parallelism grain = range chunk x type (defaultParallelism "
-    "chunks), never the whole series; result is boundary-invariant "
-    "and hash-identical to the single-window formulation the oracle "
-    "keeps.",
+    "stream into 5 tasks): x comes from the grouped operators/rank.py "
+    "prefix_sums over (event_type; ts, event_id), and each series is "
+    "CHUNKED by (x-1) div 2^16, a pure function of x.  The last "
+    f"{_OLS_WIN - 1} rows of a chunk get one carry-in copy in the next "
+    "chunk, so every rolling frame is complete INSIDE its (event_type, "
+    "chunk) window partition; carry rows are dropped from the output. "
+    "Parallelism grain = chunk x type, never the whole series: a frame-"
+    f"window partition holds at most 2^16 + {_OLS_WIN - 1} rows.  The "
+    "result is chunk-invariant and hash-identical to the single-window "
+    "formulation the oracle keeps.",
     tags=("window", "timeseries"),
 )
 def win_rolling_ols_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cobradb_spark.operators.rank import pin
+    from cobradb_spark.operators.rank import prefix_sums
 
     e = load_table(spark, sf_dir, "events").select(
         "event_type",
         "ts",
         "event_id",
         F.floor(F.col("value") * 100.0 + 0.5).cast("bigint").alias("y"),
+        F.lit(1).cast("long").alias("x"),
     )
-    k = max(spark.sparkContext.defaultParallelism, 2)
-    tagged = pin(
-        e.repartitionByRange(k, "event_type", "ts", "event_id")
-        .withColumn("_pid", F.spark_partition_id())
-        .persist()
+    # x = per-series row_number: the inclusive prefix count of a literal 1
+    ranked = prefix_sums(e, ["event_type"], ["ts", "event_id"], ["x"]).withColumn(
+        "x", F.col("x_before") + 1
     )
-    # Bounded collect: K x |event types| count rows (parallelism x 5),
-    # data-size-independent — the rank.py offset pattern per series.
-    cnts = {
-        (r["_pid"], r["event_type"]): r["count"]
-        for r in tagged.groupBy("_pid", "event_type").count().collect()
-    }
-    types = sorted({t for _, t in cnts})
-    offsets: dict[tuple[int, str], int] = {}
-    carry_map: list[tuple[int, str, int]] = []  # (src_pid, type, dst_pid)
-    for t in types:
-        pids = sorted(p for p, tt in cnts if tt == t)
-        run = 0
-        for i, p in enumerate(pids):
-            offsets[(p, t)] = run
-            run += cnts[(p, t)]
-            # dst chunk p needs the last _OLS_WIN-1 series rows from
-            # earlier chunks; walk back until enough rows accumulate.
-            need = _OLS_WIN - 1
-            j = i - 1
-            while j >= 0 and need > 0:
-                carry_map.append((pids[j], t, p))
-                need -= cnts[(pids[j], t)]
-                j -= 1
-    okey = F.concat_ws("|", F.col("_pid").cast("string"), F.col("event_type"))
-    off_expr = F.create_map(
-        *[F.lit(v) for (p, t), off in offsets.items() for v in (f"{p}|{t}", off)]
-    )
-    wloc = Window.partitionBy("_pid", "event_type").orderBy("ts", "event_id")
-    wdesc = Window.partitionBy("_pid", "event_type").orderBy(
-        F.desc("ts"), F.desc("event_id")
-    )
-    from cobradb_spark.operators.rank import pin_cache
-
-    # pinned: the real branch and the carry branch below both read this
-    # windowed subtree — caching it keeps one window pass + one exchange
-    base = pin_cache(
-        tagged.select(
-            "_pid",
-            "event_type",
-            "ts",
-            "event_id",
-            "y",
-            (off_expr[okey] + F.row_number().over(wloc)).cast("long").alias("x"),
-            F.row_number().over(wdesc).alias("_rnd"),
-        )
-    )
-    real = base.select(
-        F.col("_pid").alias("_dst"), "event_type", "ts", "event_id", "y", "x",
-        F.lit(0).alias("_carry"),
-    )
-    map_df = spark.createDataFrame(
-        carry_map, "src_pid INT, event_type STRING, _dst INT"
-    )
-    carried = (
-        base.filter(F.col("_rnd") <= _OLS_WIN - 1)
-        .join(
-            F.broadcast(map_df),
-            on=[
-                base["_pid"] == map_df["src_pid"],
-                base["event_type"] == map_df["event_type"],
-            ],
-        )
-        .select(
-            map_df["_dst"], base["event_type"], "ts", "event_id", "y", "x",
-            F.lit(1).alias("_carry"),
-        )
-    )
-    pts = real.unionByName(carried)
+    # chunk = a pure function of x; the last _OLS_WIN-1 rows of a chunk
+    # get one copy in the next chunk, whose first frames reach back to them
+    tail = F.expr(f"(x - 1) % {_OLS_CHUNK}") >= _OLS_CHUNK - (_OLS_WIN - 1)
+    pts = ranked.select(
+        "event_type",
+        "event_id",
+        "x",
+        "y",
+        F.explode(F.sequence(F.lit(0), tail.cast("int"))).alias("_carry"),
+    ).withColumn("_chunk", F.expr(f"(x - 1) div {_OLS_CHUNK}") + F.col("_carry"))
     wf = (
-        Window.partitionBy("_dst", "event_type")
-        .orderBy("ts", "event_id")
+        Window.partitionBy("event_type", "_chunk")
+        .orderBy("x")
         .rowsBetween(-(_OLS_WIN - 1), 0)
     )
     s = pts.select(

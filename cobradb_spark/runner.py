@@ -5,7 +5,8 @@ a ``RunRecord``:
 
 - build: the query function, inside a job group, so the Spark jobs a
   query runs while its frame is built are counted (``build_jobs``);
-- plan: one ``executedPlan()`` on the built frame (``plan_s``);
+- plan: one ``executedPlan()`` on the built frame (``plan_s``), which
+  also says whether the plan hands rows to Python workers (``python``);
 - execute: the sink, inside a second job group (``exec_jobs``).
 
 ``total_s = build_s + exec_s``: the span a plain build-then-sink loop
@@ -27,6 +28,7 @@ path into an older revision's engine for the A/B.
 from __future__ import annotations
 
 import itertools
+import re
 import time
 import traceback
 from dataclasses import asdict, dataclass, field
@@ -36,6 +38,15 @@ from cobradb_spark import registry
 from cobradb_spark.operators.rank import release_rank_caches
 
 SINKS = ("noop", "pandas")
+# physical operators that hand rows to Python workers, as Spark 4 names
+# them (grouped-aggregate and window pandas UDFs plan as
+# ArrowAggregatePython / ArrowWindowPython; a Python data source scan
+# prints as "BatchScan <name>[...] (Python)")
+PYTHON_NODES = re.compile(
+    r"EvalPython|MapInArrow|MapInPandas|GroupsInPandas|GroupsInArrow"
+    r"|ArrowAggregatePython|ArrowWindowPython|AggregateInPandas|WindowInPandas"
+    r"|BatchScan [^\n]*\(Python\)"
+)
 _GROUPS = itertools.count()
 
 
@@ -47,6 +58,7 @@ class RunRecord:
     build_s: float = 0.0
     build_jobs: int = 0
     plan_s: float = 0.0
+    python: bool = False
     exec_s: float = 0.0
     exec_jobs: int = 0
     total_s: float = 0.0
@@ -86,8 +98,9 @@ def run(spark, key: str, sf_dir: str, sink: str = "noop") -> RunRecord:
         rec.build_s = time.perf_counter() - t0
         sc.setLocalProperty("spark.jobGroup.id", None)
         t0 = time.perf_counter()
-        df._jdf.queryExecution().executedPlan()
+        plan = df._jdf.queryExecution().executedPlan()
         rec.plan_s = time.perf_counter() - t0
+        rec.python = bool(PYTHON_NODES.search(plan.toString()))
         sc.setJobGroup(exec_group, exec_group)
         t0 = time.perf_counter()
         if sink == "noop":

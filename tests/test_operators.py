@@ -229,7 +229,8 @@ def test_rank_sum_keys_build_without_jobs_or_pins(spark, sf_dir):
 # Spark jobs run while each per-group rank.prefix_sums key is built:
 # sampling the range boundaries, materializing the pinned frame and the
 # one per-(partition, group) collect, and nothing else — no second scan
-# of the input for group offsets or totals.
+# of the input for group offsets or totals.  The undersample key adds
+# its bounded class-count collect (a map stage and a result job).
 _PREFIX_SUMS_BUILD_JOBS = {
     "agg_weighted_median_exact": 6,
     "agg_winsorized_trimmed_mean": 6,
@@ -237,6 +238,8 @@ _PREFIX_SUMS_BUILD_JOBS = {
     "mlprep_average_precision": 6,
     "events_peak_concurrency": 5,
     "analytics_quantile_treatment_effect": 7,
+    "win_rolling_ols_slope": 5,
+    "mlprep_undersample_balanced": 7,
 }
 
 

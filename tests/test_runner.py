@@ -34,6 +34,11 @@ def test_agg_basic_runs_its_jobs_in_execution(spark, sf_dir):
     assert rec.plan_s > 0
 
 
+def test_python_plan_is_recorded(spark, sf_dir):
+    assert run(spark, "udaf_pandas_grouped_agg", sf_dir).python
+    assert not run(spark, "agg_basic", sf_dir).python
+
+
 def test_prefix_sums_key_build_jobs_and_release(spark, sf_dir):
     key = "agg_weighted_median_exact"
     rec = _warm_run(spark, key, sf_dir)

@@ -73,7 +73,8 @@ def test_bucketed_join_avoids_shuffle(spark, sf_dir):
 def test_global_rank_matches_single_partition_window(spark):
     """operators/rank.py must reproduce row_number() OVER (ORDER BY ...) exactly,
     including duplicate keys broken by the tiebreaker, for sizes that do and
-    don't divide evenly across partitions."""
+    don't divide evenly across partitions, and put the row count on every
+    row."""
     import random
 
     from pyspark.sql import Window
@@ -84,12 +85,11 @@ def test_global_rank_matches_single_partition_window(spark):
     for n, parts in [(1, 2), (37, 4), (500, 8)]:
         rows = [(i, rng.randint(0, 20)) for i in range(n)]
         df = spark.createDataFrame(rows, "uid long, key long")
-        got = {
-            r["uid"]: r["rn"]
-            for r in global_rank(
-                df, [F.col("key"), F.col("uid")], rank_col="rn", num_parts=parts
-            ).collect()
-        }
+        ranked = global_rank(
+            df, [F.col("key"), F.col("uid")], rank_col="rn", num_parts=parts
+        ).collect()
+        assert all(r["rn_n"] == n for r in ranked), f"n={n} parts={parts}"
+        got = {r["uid"]: r["rn"] for r in ranked}
         w = Window.orderBy("key", "uid")
         want = {
             r["uid"]: r["rn"]

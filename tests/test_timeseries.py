@@ -17,11 +17,15 @@ import numpy as np
 from pyspark.sql import functions as F
 
 from cobradb_spark.io import load_table
+from cobradb_spark.queries import windows
 from cobradb_spark.queries.windows import _OLS_WIN
 from cobradb_spark.registry import get_query
 
 
-def test_rolling_ols_matches_polyfit(spark, sf_dir):
+def test_rolling_ols_matches_polyfit(spark, sf_dir, monkeypatch):
+    """Also with chunks of 49 (= the carry, every row copied) and 64
+    rows: sf0.001 series run about 200 rows, so frames cross chunk
+    boundaries, which no fixture does at the default 2^16."""
     ev = (
         load_table(spark, sf_dir, "events")
         .select("event_type", "ts", "event_id", "value")
@@ -32,28 +36,27 @@ def test_rolling_ols_matches_polyfit(spark, sf_dir):
         series.setdefault(r["event_type"], []).append(
             (r["ts"], r["event_id"], r["value"])
         )
-    got = {
-        (r["event_type"], r["event_id"]): (r["x"], r["n"], r["slope"], r["intercept"])
-        for r in get_query("win_rolling_ols_slope").fn(spark, sf_dir).collect()
-    }
-    checked = 0
+    want = {}
     for etype, pts in series.items():
         pts.sort()
         ys = [np.floor(v * 100.0 + 0.5) / 100.0 for _, _, v in pts]
-        for i, (_, eid, _) in enumerate(pts):
-            if i == 0:
-                assert (etype, eid) not in got  # n == 1 rows filtered
-                continue
+        for i, (_, eid, _) in enumerate(pts[1:], 1):  # n == 1 rows are filtered
             lo = max(0, i - (_OLS_WIN - 1))
             xs = np.arange(lo + 1, i + 2, dtype=np.float64)
-            yw = np.asarray(ys[lo : i + 1])
-            slope, intercept = np.polyfit(xs, yw, 1)
-            x, n, g_slope, g_intercept = got[(etype, eid)]
-            assert x == i + 1 and n == i + 1 - lo
-            assert abs(g_slope - slope) < 1e-9 * max(1.0, abs(slope))
-            assert abs(g_intercept - intercept) < 1e-7 * max(1.0, abs(intercept))
-            checked += 1
-    assert checked > 40  # sf0.001 has 46 aligned pair hours0
+            slope, intercept = np.polyfit(xs, np.asarray(ys[lo : i + 1]), 1)
+            want[(etype, eid)] = (i + 1, i + 1 - lo, slope, intercept)
+    assert len(want) > 40
+    for chunk in (windows._OLS_CHUNK, 49, 64):
+        monkeypatch.setattr(windows, "_OLS_CHUNK", chunk)
+        rows = get_query("win_rolling_ols_slope").fn(spark, sf_dir).collect()
+        # one row per (series, event): no carry copy reaches the output
+        assert len(rows) == len(want), chunk
+        assert {(r["event_type"], r["event_id"]) for r in rows} == want.keys(), chunk
+        for r in rows:
+            x, n, slope, intercept = want[(r["event_type"], r["event_id"])]
+            assert (r["x"], r["n"]) == (x, n), chunk
+            assert abs(r["slope"] - slope) < 1e-9 * max(1.0, abs(slope)), chunk
+            assert abs(r["intercept"] - intercept) < 1e-7 * max(1.0, abs(intercept)), chunk
 
 
 def test_stl_reconstruction_and_seasonal_constancy(spark, sf_dir):

@@ -333,11 +333,12 @@ AUDITS = [
     ),
     (
         "etl_range_partition_plan",
-        ["rangepartitioning", "BroadcastNestedLoopJoin"],
-        [],
-        "ntile derived from the distributed rank over rangepartitioning; the "
-        "only SinglePartition exchange is the 1-row total-count aggregate "
-        "(broadcast back via BNLJ), never the data path",
+        ["rangepartitioning", "AGGREGATES<=2"],
+        ["SinglePartition", "BroadcastNestedLoopJoin"],
+        "ntile derived from the distributed rank over rangepartitioning "
+        "and the row count every ranked row carries: the ranked rows are "
+        "aggregated once (the per-bucket partial+final pair), with no "
+        "total-count aggregate, SinglePartition exchange or cross join",
     ),
     (
         "sample_weighted_bernoulli",
@@ -811,16 +812,17 @@ AUDITS = [
     ),
     (
         "win_rolling_ols_slope",
-        ["rangepartitioning", "hashpartitioning(_dst", "BroadcastExchange"],
-        ["CartesianProduct", "BatchEvalPython", "BroadcastNestedLoopJoin"],
-        "r7 range-chunked rewrite (the r6 verdict flagged the old "
-        "event_type-only grain: 5 tasks regardless of data size): the "
-        "series is range-partitioned into defaultParallelism chunks, "
-        "exact global x offsets come from a bounded KxTypes count "
-        "collect, the (WIN-1)-row carry tails join via a broadcast map, "
-        "and the frame window partitions by (chunk, type) — "
-        "parallelism follows chunks, never the 5-value type key; the "
-        "OLS closed form stays pure codegen arithmetic",
+        ["rangepartitioning", "hashpartitioning(event_type, _chunk"],
+        ["CartesianProduct", "BatchEvalPython", "BroadcastNestedLoopJoin",
+         "BroadcastExchange"],
+        "chunked OLS (a window PARTITIONed BY event_type alone holds a "
+        "whole series per task, whatever the data size): x comes from "
+        "the grouped prefix_sums over rangepartitioning, the series is "
+        "chunked by (x-1) div 2^16, each chunk's tail gets one carry copy "
+        "in the next chunk by a one-row explode, and the frame window "
+        "partitions by (event_type, chunk), at most 2^16 + 49 rows a "
+        "partition — no carry map, broadcast or join; the OLS closed "
+        "form stays pure codegen arithmetic",
     ),
     (
         "events_stl_decompose",
@@ -1399,9 +1401,10 @@ AUDITS = [
         "mlprep_undersample_balanced",
         ["Window"],
         ["SinglePartition", "CartesianProduct"],
-        "per-class rank = distributed global rank (range-partition + "
-        "offsets) minus a broadcast per-class offset — a naive "
-        "row_number() PARTITION BY class would serialize into 3 tasks",
+        "per-class rank = grouped prefix_sums count over (class; draw, "
+        "key), one range partition with per-(partition, class) offsets — "
+        "a naive row_number() PARTITION BY class would serialize into 3 "
+        "tasks",
     ),
     (
         "mlprep_pit_training_set",
@@ -2163,34 +2166,36 @@ def _smj_degradation_gate(spark, qs) -> dict[str, list[str]]:
     return fails
 
 
+# expression ids ("#12", "#7L"), so a fragment can name columns
+_EXPR_ID = re.compile(r"#\d+L?")
+
+# "<NAME><=n" fragments bound how many operators of a kind the numbered
+# detail section holds (each op appears once there as "(N) <op>")
+_COUNTED = {
+    # a shuffle or broadcast exchange
+    "EXCHANGES": lambda op: op.endswith("Exchange"),
+    # a parquet scan — pins subtree-reuse properties (e.g. q2's single
+    # evaluation of its cost CTE)
+    "SCANS": lambda op: "Scan parquet" in op,
+    # a hash, object-hash or sort aggregate: a partial+final pair is 2
+    "AGGREGATES": lambda op: re.match(r"\(\d+\) \w*Aggregate\b", op) is not None,
+}
+
+
 def _audit_violations(name: str, plan: str, must, must_not) -> list[str]:
     out: list[str] = []
+    ops = [l.strip() for l in plan.splitlines() if l.strip().startswith("(")]
+    texts = (plan, _EXPR_ID.sub("", plan))
     for frag in must:
-        if frag.startswith("EXCHANGES<="):
-            # count Exchange operators in the numbered detail section, not
-            # the tree rendering (each op appears once as "(N) Exchange")
-            n = sum(
-                1
-                for l in plan.splitlines()
-                if l.strip().endswith("Exchange") and l.strip().startswith("(")
-            )
-            if n > int(frag.split("<=")[1]):
-                out.append(f"{name}: {n} exchanges, wanted {frag}")
-        elif frag.startswith("SCANS<="):
-            # count scan operators in the numbered detail section —
-            # pins subtree-reuse properties (e.g. q2's single
-            # evaluation of its cost CTE)
-            n = sum(
-                1
-                for l in plan.splitlines()
-                if l.strip().startswith("(") and "Scan parquet" in l
-            )
-            if n > int(frag.split("<=")[1]):
-                out.append(f"{name}: {n} scans, wanted {frag}")
-        elif frag not in plan:
+        kind, _, bound = frag.partition("<=")
+        if kind in _COUNTED:
+            n = sum(1 for op in ops if _COUNTED[kind](op))
+            if n > int(bound):
+                out.append(f"{name}: {n} {kind.lower()}, wanted {frag}")
+        elif not any(frag in t for t in texts):
             out.append(f"{name}: expected {frag!r} in plan")
     for frag in must_not:
-        if frag in plan:
+        if any(frag in t for t in texts):
             out.append(f"{name}: forbidden {frag!r} present in plan")
     return out
 
