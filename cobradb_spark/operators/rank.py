@@ -23,9 +23,9 @@ partition:
 
 Ties must be fully broken by the order keys (callers append a unique
 key), which makes the result independent of where the sampled range
-boundaries happen to fall.  The sampled frame is persisted and pinned
-(see the RELEASE CONTRACT below), and sampling plus the collect cost
-driver jobs while the frame is built.
+boundaries happen to fall.  The sampled frame stays persisted until
+release_rank_caches() runs, and sampling plus the collect cost driver
+jobs while the frame is built.
 
 Linear consumers (a Mann-Whitney rank sum, Gini's sum of rank * x) only
 SUM the rank against a weight.  prefix_dot serves them inside one plan:
@@ -37,78 +37,50 @@ no collect: building the frame runs no Spark job.
 
 from __future__ import annotations
 
-import threading
-
 import numpy as np
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType, MapType, StructType
 
-# Persisted range-partitioned frames, pinned until the caller's result is
-# materialized.  The persist is load-bearing for correctness (the offset
-# map is computed from ONE evaluation of the sampled range partitioning;
-# an unpersisted recompute could resample different boundaries), so the
-# frames cannot be unpersisted inside the operator.
-#
-# RELEASE CONTRACT (module API, not an implementation detail): every
-# pin_cache() leaks a persisted frame until release_rank_caches() runs.
-# Two kinds of frame are pinned: prefix_sums' range-partitioned frame
-# (global_rank, global_ntile and the rolling-OLS x in queries/windows.py
-# all reach it through prefix_sums, so windows.py pins nothing itself)
-# and the query-local caches handed to pin_cache (graph loops, text and
-# analytics keys).  cobradb_spark/runner.run calls release_rank_caches()
-# once per run, in a finally, after the result is materialized; every
-# timing and checking harness (bench.py, tools/bench_once.py,
-# tools/op_sweep.py, tools/check.py) runs keys through it.  The plan-only
-# tools, tools/plan_audit.py and tools/explain_dump.py, call it after
-# each key's plan, and perfbench/worker.py after each key's run.  No
-# query build calls it: that would drain pins another
-# built-but-unexecuted query still relies on.  __spark_entry__ does not:
-# under the external verify driver the pins live until its session
-# ends.  Any OTHER caller that materializes its result must call
-# release_rank_caches() itself once the result is collected.  Guarded by
-# a lock: the registry is shared module state and query builds may race
-# from multiple threads.
-_PINNED: list[DataFrame] = []
-_PINNED_LOCK = threading.Lock()
-
-
-def pin_cache(df: DataFrame) -> DataFrame:
-    """persist() a frame that multiple downstream subtrees re-evaluate,
-    registered for release_rank_caches() — the query-local caching idiom
-    (iterative graph loops, multi-reference edge lists).  See the
-    RELEASE CONTRACT above: callers that do not run keys through
-    cobradb_spark/runner.run must call release_rank_caches() after
-    materializing their result."""
-    df = df.persist()
-    with _PINNED_LOCK:
-        _PINNED.append(df)
-    return df
+# Query-local state (persisted frames, local checkpoints) lives in the
+# session; release_rank_caches() frees it: cobradb_spark/runner.run in a
+# finally once the result is materialized, tools/plan_audit.py and
+# tools/explain_dump.py after each key's plan, perfbench/worker.py after
+# each key's run.  No query build may call it: prefix_sums' persist is
+# load-bearing (its offsets come from ONE evaluation of the sampled range
+# partitioning; a recompute could resample other boundaries and silently
+# shift the ranks).  __spark_entry__ never releases.
 
 
 def release_rank_caches() -> int:
-    """Unpersist every pinned frame; safe once downstream results are
-    materialized.  Returns the number released."""
-    with _PINNED_LOCK:
-        drained, _PINNED[:] = _PINNED[:], []
-    n = 0
-    for df in drained:
-        try:
-            df.unpersist()
-            n += 1
-        except Exception:
-            pass
-    return n
+    """Free every persisted frame and checkpoint in the active session:
+    clear the cache manager (a persisted frame's plan would otherwise
+    stay registered, and a later identical persist() would reuse the
+    unstored entry), then unpersist the RDDs left (local checkpoints,
+    raw RDD persists).  Returns how many persisted RDDs it found, 0
+    without an active session."""
+    spark = SparkSession.getActiveSession()
+    if spark is None:
+        return 0
+    jsc = spark.sparkContext._jsc
+    found = jsc.getPersistentRDDs().size()
+    spark.catalog.clearCache()
+    # the map is a snapshot, and converting it costs ~18 ms even when
+    # it is empty: fetch it again only when something was persisted
+    if found:
+        for rdd in list(jsc.getPersistentRDDs().values()):
+            rdd.unpersist()
+    return found
 
 
 def _range_tagged(df: DataFrame, order_cols: list, num_parts: int | None) -> DataFrame:
     """`df` range-partitioned by `order_cols` into `num_parts` (default:
     the core count) partitions, each row tagged with its partition id
-    `_pid`, persisted and pinned."""
+    `_pid`, persisted until the release."""
     k = num_parts or max(df.sparkSession.sparkContext.defaultParallelism, 2)
-    return pin_cache(
+    return (
         df.repartitionByRange(k, *order_cols).withColumn("_pid", F.spark_partition_id())
-    )
+    ).persist()
 
 
 def global_rank(
@@ -176,7 +148,7 @@ def prefix_sums(
 
     The frame is range-partitioned by the composite (group_cols,
     order_cols) order.  ONE driver collect of sum(v) per (partition,
-    group) — at most K + |groups| rows, read from the pinned frame —
+    group) — at most K + |groups| rows, read from the persisted frame —
     gives each partition the sum of v over the partitions before it,
     and each group the sum over the groups before it and its total.  A
     window PARTITION BY _pid in the composite order adds the partition's

@@ -3671,7 +3671,7 @@ FROM q
     tags=("analytics",),
 )
 def analytics_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cobradb_spark.operators.rank import pin_cache, prefix_sums
+    from cobradb_spark.operators.rank import prefix_sums
 
     o = load_table(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("ok"),
@@ -3686,7 +3686,7 @@ def analytics_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # the joined fact frame feeds BOTH value rollups and the final
     # moment join — pin it so the orders-lineitem join runs once
-    f = pin_cache(o.join(li, "ok").select("x", "y"))
+    f = o.join(li, "ok").select("x", "y").persist()
     # c = 2 * (count below) + (count at) - n, with n the cnt total; n
     # rides along on the small per-lineitem-count table
     gx = f.groupBy("x").agg(F.count("*").cast("long").alias("cnt"))
@@ -3785,8 +3785,6 @@ FROM best WHERE rn = 1
     tags=("analytics",),
 )
 def analytics_propensity_match(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cobradb_spark.operators.rank import pin_cache
-
     cust = load_table(spark, sf_dir, "customer")
     outcome = (
         load_table(spark, sf_dir, "orders")
@@ -3799,7 +3797,7 @@ def analytics_propensity_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # pinned: the unit table feeds both the treated and the control
     # branch — one customer-orders join, not two
-    units = pin_cache(
+    units = (
         cust.join(outcome, cust.c_custkey == outcome.o_custkey, "left")
         .select(
             F.col("c_custkey").alias("k"),
@@ -3811,7 +3809,7 @@ def analytics_propensity_match(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("treated"),
             F.coalesce(F.col("y"), F.lit(0)).cast("bigint").alias("y"),
         )
-    )
+    ).persist()
     t = units.filter("treated = 1").select(
         F.col("k").alias("tk"),
         F.col("score").alias("ts"),

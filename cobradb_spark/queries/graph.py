@@ -193,8 +193,6 @@ SELECT node AS part_id, pr AS pagerank FROM r{_ITERS}
     tags=("graph",),
 )
 def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cobradb_spark.operators.rank import pin_cache
-
     # Size gate (r4 verdict): the |V|-row rank vector broadcasts every
     # iteration ONLY while it fits the budget (~8M vertices).  Above it,
     # the edge list is persisted pre-partitioned by src ONCE and each
@@ -211,7 +209,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         edges = _copurchase_edges(spark, sf_dir)
     else:
         k = spark.sparkContext.defaultParallelism
-        edges = pin_cache(_copurchase_edges(spark, sf_dir).repartition(k, "src"))
+        edges = _copurchase_edges(spark, sf_dir).repartition(k, "src").persist()
     deg = edges.groupBy(F.col("src").alias("node")).agg(F.count("*").alias("outdeg"))
     n_df = deg.agg(F.count("*").cast("double").alias("n"))
     base = deg.crossJoin(F.broadcast(n_df))
@@ -400,9 +398,7 @@ def _jaccard_neighbors_capped(
     (exact classical Jaccard) — tests/test_graph_cap.py proves the
     capped pipeline degenerates to the uncapped one when cap exceeds
     the max degree."""
-    from cobradb_spark.operators.rank import pin_cache
-
-    edges = pin_cache(_copurchase_edges(spark, sf_dir))
+    edges = _copurchase_edges(spark, sf_dir).persist()
     fits = _vertex_count_bound(spark, sf_dir) <= _vertex_budget_rows()
     if cap is not None:
         # |V|-row degree vector; size-gated broadcast like every other
@@ -586,9 +582,8 @@ FROM comp c JOIN sizes s USING (comp_id)
 )
 def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cobradb_spark.operators.fixpoint import components
-    from cobradb_spark.operators.rank import pin_cache
 
-    edges = pin_cache(_strong_edges_both_dirs(spark, sf_dir))
+    edges = _strong_edges_both_dirs(spark, sf_dir).persist()
     nodes = edges.select("src").distinct()
     labels = components(edges, nodes, max_rounds=_CC_MAX_ITERS, name="graph_connected_components")
     sizes = labels.groupBy("comp").agg(F.count("*").alias("comp_size"))
@@ -682,9 +677,7 @@ def _lpa_labels(edges: DataFrame) -> DataFrame:
     tags=("graph",),
 )
 def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cobradb_spark.operators.rank import pin_cache
-
-    edges = pin_cache(_strong_edges_both_dirs(spark, sf_dir))
+    edges = _strong_edges_both_dirs(spark, sf_dir).persist()
     labels = _lpa_labels(edges)
     sizes = labels.groupBy("lab").agg(
         F.count("*").cast("bigint").alias("comm_size")
@@ -740,9 +733,7 @@ FROM lvl l
 def graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    from cobradb_spark.operators.rank import pin_cache
-
-    edges = pin_cache(_copurchase_edges(spark, sf_dir))
+    edges = _copurchase_edges(spark, sf_dir).persist()
     # seed stays IN-PLAN (r14 verdict item 9, the PPR TakeOrdered
     # pattern): the old driver .first() was a separate action before the
     # seed checkpoint — the limit(1) subtree folds hub selection into
@@ -847,14 +838,12 @@ SELECT node AS part_id, pr AS ppr FROM p{_ITERS} WHERE pr > 0
     tags=("graph",),
 )
 def graph_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cobradb_spark.operators.rank import pin_cache
-
     fits = _vertex_count_bound(spark, sf_dir) <= _vertex_budget_rows()
     if fits:
         edges = _copurchase_edges(spark, sf_dir)
     else:
         k = spark.sparkContext.defaultParallelism
-        edges = pin_cache(_copurchase_edges(spark, sf_dir).repartition(k, "src"))
+        edges = _copurchase_edges(spark, sf_dir).repartition(k, "src").persist()
     deg = edges.groupBy(F.col("src").alias("node")).agg(F.count("*").alias("outdeg"))
     # seed selection stays IN the plan (a 1-row TakeOrdered subtree
     # broadcast-cross-joined into deg, the oracle's src0 CTE shape)
@@ -973,8 +962,6 @@ FROM d{_SSSP_MAX_ROUNDS} ORDER BY part_id
     tags=("graph",),
 )
 def graph_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cobradb_spark.operators.rank import pin_cache
-
     lp = (
         load_table(spark, sf_dir, "lineitem")
         .select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk"))
@@ -997,7 +984,7 @@ def graph_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     # every round a separate action, so without the pin the edge
     # subtree would recompute once per round
     k = spark.sparkContext.defaultParallelism
-    edges = pin_cache(ew if fits else ew.repartition(k, "src"))
+    edges = (ew if fits else ew.repartition(k, "src")).persist()
     # seed stays IN-PLAN (r14 verdict item 9, the PPR TakeOrdered
     # pattern): hub selection folds into the seed checkpoint job — one
     # action instead of a driver .first() plus the checkpoint
@@ -1104,14 +1091,12 @@ SELECT walk_id, CAST(step AS BIGINT) AS step, node FROM all_steps
     tags=("graph", "llm"),
 )
 def graph_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cobradb_spark.operators.rank import pin_cache
-
     edges = _copurchase_edges(spark, sf_dir)
-    adj = pin_cache(
+    adj = (
         edges.groupBy("src").agg(
             F.sort_array(F.collect_list("dst")).alias("nbrs")
         )
-    )
+    ).persist()
     walks = (
         adj.filter(F.col("src") % 50 == 0)
         .select(
@@ -1201,15 +1186,13 @@ SELECT side, id, CAST(s AS DOUBLE) / 1000000.0 AS score FROM sel
     tags=("graph",),
 )
 def graph_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cobradb_spark.operators.rank import pin_cache
-
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    bip = pin_cache(
+    bip = (
         o.join(li, o["o_orderkey"] == li["l_orderkey"])
         .select(F.col("o_custkey").alias("ck"), F.col("l_partkey").alias("pk"))
         .distinct()
-    )
+    ).persist()
     h = bip.select("ck").distinct().select(
         "ck", F.lit(1000000).cast("bigint").alias("s")
     )
@@ -1327,9 +1310,7 @@ def _survivor_degrees(edges: DataFrame, surv: DataFrame) -> DataFrame:
     tags=("graph",),
 )
 def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cobradb_spark.operators.rank import pin_cache
-
-    edges = pin_cache(_strong_edges_both_dirs(spark, sf_dir))
+    edges = _strong_edges_both_dirs(spark, sf_dir).persist()
     surv = edges.select(F.col("src").alias("n")).distinct().localCheckpoint()
     for _ in range(_KCORE_ROUNDS):
         surv = (
@@ -1701,9 +1682,7 @@ FROM dsum d LEFT JOIN intra i USING (lab) CROSS JOIN mm
     tags=("graph",),
 )
 def graph_modularity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cobradb_spark.operators.rank import pin_cache
-
-    edges = pin_cache(_strong_edges_both_dirs(spark, sf_dir))
+    edges = _strong_edges_both_dirs(spark, sf_dir).persist()
     m = edges.count() // 2  # undirected edge count (list is symmetric)
     labels = _lpa_labels(edges)
     deg = edges.groupBy(F.col("src").alias("n")).agg(

@@ -62,12 +62,10 @@ def dedup_minhash_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     shingled = d.select("doc_id", shingles.alias("shingles"))
     tf = HashingTF(inputCol="shingles", outputCol="features", numFeatures=1 << 18, binary=True)
-    from cobradb_spark.operators.rank import pin_cache
-
     # pinned: approxSimilarityJoin references feats as BOTH join sides,
     # and the shingle+HashingTF pipeline is the CPU-heavy half of this
     # key — uncached it executes twice (r14, guide §5.2)
-    feats = pin_cache(tf.transform(shingled).select("doc_id", "features"))
+    feats = tf.transform(shingled).select("doc_id", "features").persist()
     mh = MinHashLSH(inputCol="features", outputCol="hashes", numHashTables=5, seed=42)
     model = mh.fit(feats)
     pairs = model.approxSimilarityJoin(feats, feats, 0.3, distCol="jaccard_dist")

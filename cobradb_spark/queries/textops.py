@@ -1447,8 +1447,6 @@ def _exact_dup_positions(d: DataFrame, L: int) -> DataFrame:
     with n >= L already enforced.  Shared by dedup_span_excise (L=40,
     span planning) and dedup_exactsubstr_cut (L=50, real excision).
     """
-    from cobradb_spark.operators.rank import pin_cache
-
     # The hash stream is pinned NARROW — (doc_id, pos, h), 24 bytes/row,
     # no gram strings — so the explode+substring+hash pass over the
     # corpus runs ONCE instead of twice (once for the candidate-hash
@@ -1460,7 +1458,7 @@ def _exact_dup_positions(d: DataFrame, L: int) -> DataFrame:
     # grams are re-derived by substring from the docs table at
     # verify time — candidates are bounded by the corpus duplicate
     # rate, so that join touches a small fraction of positions.
-    ph = pin_cache(
+    ph = (
         d.select(
             "doc_id",
             F.explode(F.sequence(F.lit(1), F.col("n") - (L - 1))).alias("pos"),
@@ -1470,10 +1468,10 @@ def _exact_dup_positions(d: DataFrame, L: int) -> DataFrame:
             "pos",
             F.xxhash64(F.expr(f"substring(text, pos, {L})")).alias("h"),
         )
-    )
-    cand_h = pin_cache(
+    ).persist()
+    cand_h = (
         ph.groupBy("h").count().filter(F.col("count") > 1).select("h")
-    )
+    ).persist()
     # Bounded driver scalar: one count of the candidate-hash set decides
     # broadcast vs shuffle join (the knn.py size-gate discipline); it
     # also materializes the pinned candidate-hash cache.
@@ -1482,14 +1480,14 @@ def _exact_dup_positions(d: DataFrame, L: int) -> DataFrame:
     # pinned: the candidate set (orders below the position stream)
     # feeds both the exact-verify groupBy and the dup join — caching
     # stops the candidate derivation from re-executing per consumer
-    cand = pin_cache(
+    cand = (
         ph.join(cand_h, "h")
         .select("doc_id", "pos")
         .join(d.select("doc_id", "text"), "doc_id")
         .select(
             "doc_id", "pos", F.expr(f"substring(text, pos, {L})").alias("gram")
         )
-    )
+    ).persist()
     gfreq = (
         cand.groupBy("gram").count().filter(F.col("count") > 1).select("gram")
     )
@@ -1584,8 +1582,6 @@ def dedup_exactsubstr_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.length("text") >= L)
         .select("doc_id", "text", F.length("text").alias("n"))
     )
-    from cobradb_spark.operators.rank import pin_cache
-
     dup = _exact_dup_positions(d, L)
     wdoc = Window.partitionBy("doc_id").orderBy("pos")
     isl = (
@@ -1600,11 +1596,11 @@ def dedup_exactsubstr_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # pinned: spans (one row per merged island) feed the segment
     # reassembly AND the per-doc aggregate
-    spans = pin_cache(
+    spans = (
         isl.groupBy("doc_id", "island").agg(
             F.min("pos").alias("s"), (F.max("pos") + (L - 1)).alias("e")
         )
-    )
+    ).persist()
     wsp = Window.partitionBy("doc_id").orderBy("s")
     wspd = Window.partitionBy("doc_id").orderBy(F.col("s").desc())
     sp = spans.select(
@@ -3252,17 +3248,15 @@ FROM agg
     tags=("textops", "llm"),
 )
 def text_js_divergence_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cobradb_spark.operators.rank import pin_cache
-
     d = load_table(spark, sf_dir, "documents")
     tok = d.select(
         "source", F.explode(F.split("text", " ")).alias("term")
     ).filter(F.col("term") != "")
     # pinned: (source, term) counts feed both self-join sides and the
     # totals — one tokenize+rollup pass, not three
-    ts = pin_cache(
+    ts = (
         tok.groupBy("source", "term").agg(F.count("*").cast("bigint").alias("tf"))
-    )
+    ).persist()
     tot = ts.groupBy("source").agg(F.sum("tf").cast("bigint").alias("n"))
     a = ts.alias("a")
     b = ts.alias("b")

@@ -13,8 +13,9 @@ a ``RunRecord``:
 times.  The explicit plan step is left out of it, because the sink plans
 its own query again.  The record also carries the host's CPU steal over
 the run and the change in the session's persisted-RDD count.  A failing
-key never raises: its traceback lands in ``error``.  The rank pins are
-released in a ``finally``, so no harness releases them itself.
+key never raises: its traceback lands in ``error``.  Every frame and
+checkpoint the key persisted is released in a ``finally``
+(``release_rank_caches``), so no harness releases them itself.
 
 Sinks: ``"noop"`` writes through Spark's noop format (the full plan runs,
 nothing is collected); ``"pandas"`` collects with ``toPandas()`` and keeps

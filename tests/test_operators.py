@@ -208,19 +208,23 @@ def _load_tables(spark, sf_dir, tables):
             load_table(spark, sf_dir, table)
 
 
+def _cache_manager(spark):
+    return spark._jsparkSession.sharedState().cacheManager()
+
+
 def test_rank_sum_keys_build_without_jobs_or_pins(spark, sf_dir):
     """The prefix_dot keys fold their rank sums into the plan: building
-    the frame runs no Spark job and pins nothing.  The range-partitioned
-    rank of agg_quantile_exact_global is the control that the job
-    group does see build-time jobs."""
+    the frame runs no Spark job and persists nothing.  The range-
+    partitioned rank of agg_quantile_exact_global is the control that
+    the job group does see build-time jobs."""
     from cobradb_spark.operators import rank
 
     _load_tables(spark, sf_dir, ("orders", "lineitem"))
+    rank.release_rank_caches()
     try:
-        pins = [id(df) for df in rank._PINNED]
         for key in ("mlprep_roc_auc", "agg_gini_spend"):
             assert _build_jobs(spark, sf_dir, key) == 0, key
-            assert [id(df) for df in rank._PINNED] == pins, key
+            assert _cache_manager(spark).isEmpty(), key
         assert _build_jobs(spark, sf_dir, "agg_quantile_exact_global") > 0
     finally:
         rank.release_rank_caches()
@@ -319,28 +323,33 @@ def test_motion_ppm_walker_handles_mixed_frame_sizes(spark):
     assert rows[0].r_sum == 10 * 4 and rows[1].r_sum == 20 * 3 and rows[2].r_sum == 30 * 4
 
 
-def test_pin_cache_lifecycle(spark):
-    """pin_cache persists; release_rank_caches unpersists everything pinned
-    (round-3 ADVICE: rank caches accumulated across harness runs)."""
+def test_release_frees_persisted_frames_and_checkpoints(spark):
+    """release_rank_caches frees a persisted frame and a local checkpoint:
+    no persisted RDD is left, the cache manager holds no plan a later
+    identical persist() could reuse, and a second release finds nothing."""
     from cobradb_spark.operators import rank
 
-    pinned = rank.pin_cache(spark.range(50))
-    assert pinned.count() == 50
-    assert pinned.storageLevel.useMemory
-    released = rank.release_rank_caches()
-    assert released >= 1
-    assert not pinned.storageLevel.useMemory
-    assert rank.release_rank_caches() == 0  # registry drained
+    persisted = spark.range(50).persist()
+    assert persisted.count() == 50
+    assert persisted.storageLevel.useMemory
+    checkpoint = spark.range(30).localCheckpoint()
+    assert checkpoint.count() == 30
+    assert rank.release_rank_caches() >= 2
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == 0
+    assert _cache_manager(spark).isEmpty()
+    assert not persisted.storageLevel.useMemory
+    assert rank.release_rank_caches() == 0
 
 
 def test_query_build_keeps_other_queries_pins(spark, sf_dir):
-    """Building a query must not drain pins another built-but-unexecuted
-    query still relies on; the harnesses release after each key."""
+    """Building a query must not release frames another built-but-
+    unexecuted query still relies on; the harnesses release after each
+    key."""
     from cobradb_spark import registry
     from cobradb_spark.operators import rank
 
     try:
-        pinned = rank.pin_cache(spark.range(50))
+        pinned = spark.range(50).persist()
         assert pinned.count() == 50
         registry.get_query("agg_quantile_exact_global").fn(spark, sf_dir)
         assert pinned.storageLevel.useMemory

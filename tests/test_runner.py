@@ -9,7 +9,8 @@ import shutil
 import subprocess
 import sys
 
-from test_operators import _PREFIX_SUMS_BUILD_JOBS
+import pytest
+from test_operators import _PREFIX_SUMS_BUILD_JOBS, _cache_manager
 
 from cobradb_spark import registry
 from cobradb_spark.operators import rank
@@ -45,24 +46,38 @@ def test_prefix_sums_key_build_jobs_and_release(spark, sf_dir):
     assert rec.error is None
     assert rec.build_jobs == _PREFIX_SUMS_BUILD_JOBS[key]
     assert rec.persisted_delta == 0
-    assert not rank._PINNED
+    assert _cache_manager(spark).isEmpty()
 
 
 def test_failing_key_is_recorded_and_pins_released(spark, sf_dir, monkeypatch):
     pinned = []
 
     def boom(spark, sf_dir):
-        df = rank.pin_cache(spark.range(10))
+        df = spark.range(10).persist()
         df.count()
         pinned.append(df)
+        spark.range(5).localCheckpoint()
         raise ValueError("boom at build")
 
     monkeypatch.setitem(registry._REGISTRY, "test_runner_boom", registry.Query("test_runner_boom", boom))
+    rank.release_rank_caches()  # what earlier tests left would read as a negative delta
     rec = run(spark, "test_runner_boom", sf_dir)
     assert "boom at build" in rec.error
-    assert not rank._PINNED
     assert not pinned[0].storageLevel.useMemory
     assert rec.persisted_delta == 0
+
+
+@pytest.mark.parametrize(
+    "key", ["graph_connected_components", "graph_hits_scores", "text_bpe_train"]
+)
+def test_loop_keys_leave_nothing_persisted(spark, sf_dir, key):
+    """A loop key's per-round local checkpoints and its persisted edge
+    list are gone once its run ends, not left for the ContextCleaner."""
+    rank.release_rank_caches()  # free what earlier tests left
+    before = spark.sparkContext._jsc.getPersistentRDDs().size()
+    rec = run(spark, key, sf_dir)
+    assert rec.error is None
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == before
 
 
 def test_pandas_sink_matches_to_pandas(spark, sf_dir):

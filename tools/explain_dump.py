@@ -33,7 +33,7 @@ def main() -> int:
     qs = registry.all_queries()
     for key in keys:
         plan = formatted_plan(qs[key].fn(spark, SF))
-        release_rank_caches()  # the next key plans without this key's pins
+        release_rank_caches()  # the next key plans without this key's caches
         path = os.path.join(out_dir, f"{key}_{suffix}.txt")
         with open(path, "w") as f:
             f.write(f"# {key} — explain('formatted') at {SF}\n\n")

@@ -9,7 +9,9 @@ through cobradb_spark/runner.py's noop sink on one shared session and
 writes one JSON line per key: the runner record (build / plan / execute
 seconds, build and execute job counts, whether the plan runs Python
 workers, steal, persisted-RDD delta, error).  A failing key is
-recorded, not fatal.
+recorded, not fatal.  The closing summary line names the keys that
+failed (`errors`) and those whose run left persisted RDDs behind
+(`leaked`).
 
 --join reads two sweeps of the same keys at two scales and rewrites the
 generated table of SCALING.md (between its BEGIN/END markers) with each
@@ -36,7 +38,7 @@ BEGIN, END = "<!-- BEGIN op_sweep --join -->", "<!-- END op_sweep --join -->"
 def sweep(out_path: str, keys: list[str]) -> None:
     keys = keys or sorted(registry.all_queries())
     spark = get_spark("op-sweep")
-    build_jobs, total_s, errors = 0, 0.0, []
+    build_jobs, total_s, errors, leaked = 0, 0.0, [], []
     with open(out_path, "w") as f:
         for i, key in enumerate(keys):
             rec = run(spark, key, SF)  # warmup
@@ -46,13 +48,15 @@ def sweep(out_path: str, keys: list[str]) -> None:
             f.flush()
             if rec.error:
                 errors.append(key)
+            if rec.persisted_delta > 0:
+                leaked.append(key)
             build_jobs += rec.build_jobs
             total_s += rec.total_s
             if (i + 1) % 25 == 0:
                 print(f"... {i + 1}/{len(keys)}", file=sys.stderr, flush=True)
     spark.stop()
     print(json.dumps({"n": len(keys), "total_s": round(total_s, 1),
-                      "build_jobs": build_jobs, "errors": errors}))
+                      "build_jobs": build_jobs, "errors": errors, "leaked": leaked}))
 
 
 def _read(path: str) -> dict[str, dict]:

@@ -2223,7 +2223,7 @@ def main() -> int:
             failures[name] = [f"{name}: plan build failed: {type(e).__name__}: {e}"]
             continue
         finally:
-            # plan every key in isolation: a frame an earlier key pinned
+            # plan every key in isolation: a frame an earlier key persisted
             # would otherwise substitute into this plan as a cache scan
             release_rank_caches()
         hashes[name] = canonical_plan_hash(plan)
