@@ -7,7 +7,9 @@ summary + the 21 sql_* keys) at $SPARK_GRAFT_SF_DIR (default
 Per query: one untimed warmup (codegen/JIT), then 3 timed runs through
 cobradb_spark/runner.py's noop sink, median reported.  `layers` holds
 the build / plan / execute split and job counts of each median run;
-`steal_jiffies` the host CPU steal summed over the timed runs.
+`steal_jiffies` the host CPU steal summed over the timed runs;
+`class_archive` whether the driver JVM started from the class-data
+archive (cobradb_spark/session.py), read from the JVM's memory maps.
 
 Absolute seconds drift with the machine, so the `ab` block runs an
 INTERLEAVED A/B — the engine this one replaces (a git worktree of the
@@ -28,7 +30,7 @@ immediately —
   {"metric": "suite_seconds", "value": N, "unit": "sec",
    "queries": {...}, "sf": ...,
    "tpch_suite_seconds": M, "tpch_queries": {...},
-   "layers": {label: {...}}, "steal_jiffies": J}
+   "layers": {label: {...}}, "steal_jiffies": J, "class_archive": bool}
 — then (unless SPARK_GRAFT_AB=0) the SAME payload re-emitted with the
 `ab` block added:
   {..., "ab": {"ref": sha, "ref_runs": [...], "head_runs": [...],
@@ -53,7 +55,7 @@ from bench_once import HEADLINE, tpch_keys  # noqa: E402
 
 from cobradb_spark import registry  # noqa: E402
 from cobradb_spark.runner import run  # noqa: E402
-from cobradb_spark.session import get_spark  # noqa: E402
+from cobradb_spark.session import class_archive_mapped, get_spark  # noqa: E402
 
 LAYERS = ("build_s", "build_jobs", "plan_s", "exec_s", "exec_jobs")
 
@@ -162,6 +164,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     spark = get_spark("bench")
+    class_archive = class_archive_mapped(spark)
     results, layers, steal = _timed_suite(spark, sf_dir, HEADLINE)
     tpch, tpch_layers, tpch_steal = _timed_suite(
         spark, sf_dir, {("q1" if k == "agg_basic" else k): k for k in tpch_keys(registry.all_queries())})
@@ -176,6 +179,7 @@ def main() -> None:
         "tpch_queries": tpch,
         "layers": {**layers, **tpch_layers},
         "steal_jiffies": steal + tpch_steal,
+        "class_archive": class_archive,
     }
     # Emit the primary numbers IMMEDIATELY (and flush): if a harness
     # timeout kills the slower A/B phase below, the last complete JSON

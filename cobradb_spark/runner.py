@@ -7,6 +7,8 @@ a ``RunRecord``:
   query runs while its frame is built are counted (``build_jobs``);
 - plan: one ``executedPlan()`` on the built frame (``plan_s``), which
   also says whether the plan hands rows to Python workers (``python``);
+  then, outside every timed span, the plan's canonical hash
+  (``plan_hash``, as ``plans/HASHES.json`` holds it);
 - execute: the sink, inside a second job group (``exec_jobs``).
 
 ``total_s = build_s + exec_s``: the span a plain build-then-sink loop
@@ -23,7 +25,8 @@ the frame and the output schema on the record.
 
 This module imports only ``registry`` and ``release_rank_caches``, the
 engine API every revision has: tools/bench_once.py loads this file by
-path into an older revision's engine for the A/B.
+path into an older revision's engine for the A/B.  ``plans`` is imported
+inside ``run``, and ``plan_hash`` stays None in an engine without it.
 """
 
 from __future__ import annotations
@@ -60,6 +63,7 @@ class RunRecord:
     build_jobs: int = 0
     plan_s: float = 0.0
     python: bool = False
+    plan_hash: str | None = None
     exec_s: float = 0.0
     exec_jobs: int = 0
     total_s: float = 0.0
@@ -85,6 +89,10 @@ def run(spark, key: str, sf_dir: str, sink: str = "noop") -> RunRecord:
     """Build, plan and execute one registry key; see the module doc."""
     if sink not in SINKS:
         raise ValueError(f"sink must be one of {SINKS}, got {sink!r}")
+    try:
+        from cobradb_spark.plans import canonical_plan_hash, formatted_plan
+    except ImportError:
+        canonical_plan_hash = None
     sc = spark.sparkContext
     rec = RunRecord(key, sf_dir, sink)
     n = next(_GROUPS)
@@ -102,6 +110,8 @@ def run(spark, key: str, sf_dir: str, sink: str = "noop") -> RunRecord:
         plan = df._jdf.queryExecution().executedPlan()
         rec.plan_s = time.perf_counter() - t0
         rec.python = bool(PYTHON_NODES.search(plan.toString()))
+        if canonical_plan_hash:
+            rec.plan_hash = canonical_plan_hash(formatted_plan(df))
         sc.setJobGroup(exec_group, exec_group)
         t0 = time.perf_counter()
         if sink == "noop":

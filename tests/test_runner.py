@@ -35,6 +35,14 @@ def test_agg_basic_runs_its_jobs_in_execution(spark, sf_dir):
     assert rec.plan_s > 0
 
 
+def test_plan_hash_is_the_audited_hash(spark, sf_mid):
+    """The record's plan hash is the one tools/plan_audit.py writes for
+    the key at sf0.01."""
+    with open(os.path.join(ROOT, "plans", "HASHES.json")) as f:
+        want = json.load(f)["agg_basic"]["hash"]
+    assert run(spark, "agg_basic", sf_mid).plan_hash == want
+
+
 def test_python_plan_is_recorded(spark, sf_dir):
     assert run(spark, "udaf_pandas_grouped_agg", sf_dir).python
     assert not run(spark, "agg_basic", sf_dir).python

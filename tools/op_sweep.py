@@ -8,10 +8,10 @@ Runs EVERY registry key (or the named subset) at $SPARK_GRAFT_SF_DIR
 through cobradb_spark/runner.py's noop sink on one shared session and
 writes one JSON line per key: the runner record (build / plan / execute
 seconds, build and execute job counts, whether the plan runs Python
-workers, steal, persisted-RDD delta, error).  A failing key is
-recorded, not fatal.  The closing summary line names the keys that
-failed (`errors`) and those whose run left persisted RDDs behind
-(`leaked`).
+workers, the canonical plan hash, steal, persisted-RDD delta, error).
+A failing key is recorded, not fatal.  The closing summary line names
+the keys that failed (`errors`) and those whose run left persisted RDDs
+behind (`leaked`).
 
 --join reads two sweeps of the same keys at two scales and rewrites the
 generated table of SCALING.md (between its BEGIN/END markers) with each
